@@ -466,7 +466,7 @@ def _q_embedding_near_pairs_by_label(spark, sf_dir):
     blocking key bounds the join to within-class pairs — the
     brute-force baseline of the near-dup family; LSH/IVF variants are
     the probabilistic scale path, unit-tested separately)."""
-    from schematic_spark.functions.dedup import _dot, _norm
+    from schematic_spark.functions import dot, l2_norm
 
     emb = _read(spark, sf_dir, "embeddings").select(
         "vec_id", "label",
@@ -475,7 +475,7 @@ def _q_embedding_near_pairs_by_label(spark, sf_dir):
     # norms are per-ROW, so compute them once before the pair join
     # (inside the join each would be re-evaluated per PAIR — 100× the
     # work at 100-vector blocks, worse at scale)
-    emb = emb.withColumn("nrm", _norm(F.col("v")))
+    emb = emb.withColumn("nrm", l2_norm(F.col("v")))
     # the label self-join broadcasts the build side, so the stream side's
     # scan partitioning is the whole stage's parallelism — a single-file
     # embeddings table would run every per-pair cosine HOF on ONE task.
@@ -484,7 +484,7 @@ def _q_embedding_near_pairs_by_label(spark, sf_dir):
     from schematic_spark.sources import spread_for_compute
 
     a, b = spread_for_compute(emb).alias("a"), emb.alias("b")
-    cos = _dot(F.col("a.v"), F.col("b.v")) / F.greatest(
+    cos = dot(F.col("a.v"), F.col("b.v")) / F.greatest(
         F.col("a.nrm") * F.col("b.nrm"), F.lit(1e-12)
     )
     return (
@@ -647,9 +647,7 @@ def _q_simhash_documents(spark, sf_dir):
     from schematic_spark.functions import simhash_near_duplicates
 
     docs = _read(spark, sf_dir, "documents")
-    pairs = simhash_near_duplicates(
-        docs, "text", "doc_id", max_hamming=1, catalyst=True
-    )
+    pairs = simhash_near_duplicates(docs, "text", "doc_id", max_hamming=1)
     return pairs.groupBy("hamming").agg(
         F.count(F.lit(1)).alias("n_pairs")
     )
@@ -1893,23 +1891,7 @@ def _q_capped_docs_per_source(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is load-bearing: the driver's correctness gate hashes
-    # exactly the first 50 keys (CORRECTNESS_r03/r04 each covered keys
-    # 1-50 in dict order).  Slots 1-19 hold the r3/r4 queries with no
-    # driver evidence before this round; slots 20-28 the nine new
-    # round-5 queries (Q4/Q5/Q12/Q14 + Bloom, then the late
-    # Q13/Q15/Q17/Q22); slots 29-50 the most intricate previously-green
-    # queries.  27 long-stable queries sit past the cap this round —
-    # the original 18, the 5 displaced by the first round-5 batch
-    # (top_docs_per_lang, heavy_clickers_not_viewers,
-    # events_value_percentiles, chi2_drift_event_types,
-    # psi_drift_event_types), and the 4 displaced by the late batch
-    # (chunked_interleaved_docs, capped_docs_per_source,
-    # repetition_documents, train_split_documents).  All 27 are
-    # driver-green from r3/r4 and MUST rotate back next round so every
-    # query gets driver evidence within two rounds.
     return {
-        # -- never driver-checked (r3/r4 additions) + the cured red row
         "tpch_q1_pricing": _q_tpch_q1_pricing,
         "tpch_q3_revenue": _q_tpch_q3_revenue,
         "tpch_q18_large_orders": _q_tpch_q18_large_orders,
@@ -1930,7 +1912,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "value_deciles_by_type": _q_value_deciles_by_type,
         "user_event_type_pivot": _q_user_event_type_pivot,
         "weighted_mix_documents": _q_weighted_mix_documents,
-        # -- new this round (r5)
         "tpch_q4_late_orders": _q_tpch_q4_late_orders,
         "tpch_q5_local_volume": _q_tpch_q5_local_volume,
         "tpch_q12_priority_class": _q_tpch_q12_priority_class,
@@ -1940,9 +1921,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q15_top_supplier": _q_tpch_q15_top_supplier,
         "tpch_q17_small_qty_orders": _q_tpch_q17_small_qty_orders,
         "tpch_q22_dormant_customers": _q_tpch_q22_dormant_customers,
-        # -- most intricate previously-green queries (the four added
-        #    above displace chunked/capped/repetition/train_split —
-        #    all r04-driver-green — past the 50-slot window)
         "winnow_fingerprints_documents": _q_winnow_fingerprints_documents,
         "shared_passages_documents": _q_shared_passages_documents,
         "minhash_near_dups_documents": _q_minhash_near_dups_documents,
@@ -1974,8 +1952,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_value_percentiles": _q_events_value_percentiles,
         "chi2_drift_event_types": _q_chi2_drift_event_types,
         "psi_drift_event_types": _q_psi_drift_event_types,
-        # -- rotated out this round (driver-green in r3 AND r4);
-        #    rotate back into the window next round
         "validate_documents": _q_validate_documents,
         "verdict_summary_documents": _q_verdict_summary_documents,
         "validate_events": _q_validate_events,

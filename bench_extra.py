@@ -209,8 +209,7 @@ def scale_evidence(spark, factor=10):
             lay.spread_for_compute = orig_lay
 
     ab("simhash", lambda df: _noop(
-        simhash_near_duplicates(df, "text", "doc_id", max_hamming=1,
-                                catalyst=True)))
+        simhash_near_duplicates(df, "text", "doc_id", max_hamming=1)))
     ab("shared_passages", lambda df: _noop(
         shared_passage_pairs(df, "text", "doc_id", k=16, window=8,
                              min_shared=3, max_fp_group=100)))

@@ -1,8 +1,10 @@
 from .dedup import (  # noqa: F401
     cosine_similarity,
+    dot,
     drop_exact_duplicates,
     embedding_near_duplicates,
     exact_duplicate_groups,
+    l2_norm,
     minhash_lsh_candidates,
     minhash_near_duplicates,
     minhash_signature,
@@ -10,10 +12,8 @@ from .dedup import (  # noqa: F401
     ngram_jaccard_pairs,
     drop_near_duplicates,
     near_duplicate_components,
-    shingles,
     shingles_from_tokens,
     tokens_column,
-    simhash,
     simhash_catalyst,
     simhash_catalyst_from_tokens,
     simhash_near_duplicates,

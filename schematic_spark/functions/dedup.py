@@ -8,10 +8,10 @@ Five strategies, each chosen for a different scale/recall point:
   come from a self-join on (band, band_hash) buckets, so the shuffle
   carries b small keys per doc instead of O(n^2) comparisons; exact
   n-gram Jaccard verifies candidates.
-* **SimHash** — 64-bit weighted-bit signature via a vectorized pandas
-  UDF (numpy bit tricks over Arrow batches); near-dups = signatures at
-  Hamming distance ≤ t, found by the standard 4-block Charikar trick
-  (exact-match join on each block → verify Hamming).
+* **SimHash** — 60-bit majority-vote signature over md5 token hashes,
+  computed entirely in Catalyst (no UDF, recomputable in DuckDB);
+  near-dups = signatures at Hamming distance ≤ t, found by the Charikar
+  block trick (exact-match join on each block → verify Hamming).
 * **n-gram Jaccard** — exact pairwise similarity on candidate pairs
   (array_intersect/array_union, JVM-side).
 * **embedding cosine** — near-dup by cosine ≥ τ over an embedding
@@ -24,11 +24,8 @@ documents.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .text import normalized_text, doc_fingerprint
 from ..sources.layout import spread_for_compute
@@ -62,9 +59,7 @@ def drop_exact_duplicates(
     (fingerprint, id) + broadcast-able winners join when small; at scale
     the window variant below keeps it one shuffle."""
     fp = doc_fingerprint(text_col).alias("_fp")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
+    w =Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
     return (
         df.select("*", fp)
         .withColumn("_rn", F.row_number().over(w))
@@ -103,13 +98,6 @@ def shingles_from_tokens(tokens: Column, n: int = 3) -> Column:
         F.size(tokens) < n, F.array(F.concat_ws(" ", tokens))
     )
     return F.array_distinct(F.coalesce(short, grams))
-
-
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """One-expression convenience form — prefer
-    ``tokens_column`` + ``shingles_from_tokens`` with a projection
-    boundary in anything hot (see that function's cost note)."""
-    return shingles_from_tokens(tokens_column(col), n)
 
 
 def minhash_signature(
@@ -309,84 +297,6 @@ def minhash_near_duplicates(
 # SimHash
 # ---------------------------------------------------------------------------
 
-_FNV_OFFSET = np.uint64(0xCBF29CE484222325)
-_FNV_PRIME = np.uint64(0x100000001B3)
-
-
-def _simhash64_impl(texts: pd.Series) -> pd.Series:
-    """64-bit SimHash over whitespace tokens — FULLY batch-vectorized
-    numpy over the Arrow batch: no Python-level per-row or per-token
-    loop anywhere. The only Python loop is over BYTE POSITIONS of the
-    flattened token buffer (bounded by the longest token, typically
-    <30 iterations regardless of batch size), which keeps the hash
-    byte-exact FNV-1a — signatures are identical to the per-token
-    reference ``hash_token`` (pinned by fixture tests)."""
-    n = len(texts)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return pd.Series(out)
-    toks = texts.fillna("").astype(str).str.lower().str.split()
-    counts = toks.str.len().fillna(0).to_numpy(dtype=np.int64)
-    if counts.sum() == 0:
-        return pd.Series(out)
-    flat = toks.explode().dropna()
-    enc = flat.str.encode("utf-8")
-    lens = enc.str.len().to_numpy(dtype=np.int64)
-    buf = np.frombuffer(b"".join(enc.tolist()), dtype=np.uint8)
-    offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    # FNV-1a, vectorized ACROSS tokens: iterate byte positions, each
-    # step one masked numpy xor+multiply over every still-active token
-    h = np.full(len(lens), _FNV_OFFSET, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for j in range(int(lens.max())):
-            active = lens > j
-            hj = h[active]
-            hj ^= buf[offsets[active] + j].astype(np.uint64)
-            hj *= _FNV_PRIME
-            h[active] = hj
-    # per-document bit votes: one (tokens × 64) bit matrix + segmented
-    # sums at document boundaries
-    bits = (
-        (h[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
-    ).astype(np.int64)
-    row_starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-    nonempty = counts > 0
-    ones = np.add.reduceat(bits, row_starts[nonempty], axis=0)
-    sig_bits = (2 * ones) > counts[nonempty][:, None]  # +1/-1 vote > 0
-    weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-    sigs = (sig_bits.astype(np.uint64) * weights).sum(
-        axis=1, dtype=np.uint64
-    )
-    out[nonempty] = sigs.view(np.int64)
-    return pd.Series(out)
-
-
-def hash_token(tok: str) -> int:
-    """Deterministic 64-bit FNV-1a (stable across sessions, unlike
-    Python's salted ``hash``)."""
-    h = 0xCBF29CE484222325
-    for ch in tok.encode("utf-8"):
-        h ^= ch
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-_simhash64 = None
-
-
-def simhash(col: Column | str) -> Column:
-    # UDF registration needs an active session → create lazily, once
-    global _simhash64
-    if _simhash64 is None:
-        from pyspark.sql.types import LongType
-
-        _simhash64 = pandas_udf(_simhash64_impl, LongType())
-    c = F.col(col) if isinstance(col, str) else col
-    return _simhash64(c)
-
-
-# --- pure-Catalyst SimHash (no UDF at all) ---------------------------------
-
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits signed int64 exactly
 
 
@@ -458,7 +368,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     *,
     max_hamming: int = 3,
-    catalyst: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, hamming) pairs with Hamming(sig_a, sig_b) ≤ t.
 
@@ -467,35 +376,28 @@ def simhash_near_duplicates(
     per block finds ALL candidates (100% recall — the trick is exact,
     not probabilistic) with a cheap shuffle.
 
-    ``catalyst=True`` uses the UDF-free md5-based signature
-    (:func:`simhash_catalyst`, 60 bits, oracle-checkable); the default
-    keeps the vectorized-FNV pandas-UDF signature (64 bits). Documents
-    with no tokens are excluded in catalyst mode (their signature is
-    degenerate 0 and would pair with each other)."""
+    The signature is :func:`simhash_catalyst`'s UDF-free md5 one (60
+    bits, oracle-checkable). Documents with no tokens are excluded:
+    their signature is a degenerate 0 and would pair with each other."""
     # per-doc signature cost is O(tokens · bits) interpreted HOF ops —
     # spread the scan so one small file doesn't serialize the stage
     df = spread_for_compute(df)
-    if catalyst:
-        sig_bits = SIMHASH_BITS
-        # tokens as a COLUMN: lambda references become attribute reads
-        # (an inline tokenizer expression would re-run per bit — the
-        # same HOF-capture trap as shingling)
-        sig = (
-            df.select(
-                F.col(id_col),
-                _simhash_tokens(text_col).alias("_stok"),
-            )
-            .where(F.size("_stok") > 0)
-            .select(
-                F.col(id_col),
-                simhash_catalyst_from_tokens(F.col("_stok")).alias("_sig"),
-            )
+    # tokens as a COLUMN: lambda references become attribute reads
+    # (an inline tokenizer expression would re-run per bit — the
+    # same HOF-capture trap as shingling)
+    sig = (
+        df.select(
+            F.col(id_col),
+            _simhash_tokens(text_col).alias("_stok"),
         )
-    else:
-        sig_bits = 64
-        sig = df.select(F.col(id_col), simhash(text_col).alias("_sig"))
+        .where(F.size("_stok") > 0)
+        .select(
+            F.col(id_col),
+            simhash_catalyst_from_tokens(F.col("_stok")).alias("_sig"),
+        )
+    )
     n_blocks = max_hamming + 1
-    width = sig_bits // n_blocks
+    width = SIMHASH_BITS // n_blocks
     blocks = sig.select(
         id_col, "_sig",
         F.explode(F.array(*[
@@ -508,7 +410,8 @@ def simhash_near_duplicates(
         ])).alias("bk"),
     ).select(id_col, "_sig", F.col("bk.block").alias("block"),
              F.col("bk.key").alias("key")).cache()
-    # cached: the self-join would run the simhash pandas UDF twice per side
+    # cached: the self-join would otherwise evaluate the per-token md5
+    # signature HOFs once per side
     a, b = blocks.alias("a"), blocks.alias("b")
     pairs = (
         a.join(
@@ -534,7 +437,9 @@ def simhash_near_duplicates(
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def _dot(a: Column, b: Column) -> Column:
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns — one ``aggregate`` over
+    ``zip_with``, JVM-side."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -542,7 +447,8 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
+def l2_norm(a: Column) -> Column:
+    """Euclidean norm of an array column, JVM-side."""
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
     )
@@ -551,8 +457,8 @@ def _norm(a: Column) -> Column:
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine over two array<float/double> columns — JVM higher-order
     functions, no UDF."""
-    return _dot(a, b) / F.greatest(
-        _norm(a) * _norm(b), F.lit(1e-12)
+    return dot(a, b) / F.greatest(
+        l2_norm(a) * l2_norm(b), F.lit(1e-12)
     )
 
 

@@ -16,7 +16,6 @@ from .drift import (  # noqa: F401
 from .fused import FusedSuiteReport, run_fused_suite  # noqa: F401
 from .referential import (  # noqa: F401
     bloom_bitmap,
-    bloom_semi_filter,
     dangling_rows,
     dangling_rows_bloom,
     referential_report,

@@ -144,54 +144,6 @@ def _bloom_maybe_flag(
     return out, flag
 
 
-def bloom_semi_filter(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: dict[str, str] | str,
-    *,
-    n_keys: int | None = None,
-    bits_per_key: int = 10,
-    n_hashes: int = 5,
-) -> DataFrame:
-    """Pre-shuffle runtime filter for SELECTIVE equi-joins — the
-    primary Bloom use. When the dim side is filtered hard (the classic
-    star-schema shape: 1% of parts, one region, one day) but its key
-    set still won't broadcast as a hash relation, the Bloom bitmap of
-    the filtered keys DOES broadcast at ~10 bits/key, and dropping the
-    fact rows that cannot match BEFORE the exchange shrinks the shuffle
-    to the matching fraction (+ ~0.8% false positives at the defaults).
-    The exact join downstream removes the false positives, so results
-    are identical to joining the unfiltered fact. One fact scan, no
-    fact shuffle; this is Spark's InjectRuntimeFilter rewrite expressed
-    with public primitives, under caller control.
-
-    Returns the filtered fact (original columns). ``n_keys`` sizes the
-    filter; when omitted an eager ``dim.count()`` runs at construction
-    time — pass the known cardinality in anything hot."""
-    if isinstance(on, str):
-        on = {on: on}
-    if len(on) != 1:
-        raise ValueError(
-            "bloom_semi_filter prefilters on exactly one key column; "
-            f"got {sorted(on)} — prefilter on one and let the exact "
-            "join enforce the rest"
-        )
-    (fk, dk), = on.items()
-    _require_same_key_type(fact, fk, dim, dk, "bloom_semi_filter")
-    if n_keys is None:
-        n_keys = dim.where(F.col(dk).isNotNull()).count()
-    m_bits = max(64, bits_per_key * n_keys)
-    # cached: each of the n_hashes probe joins broadcasts the bitmap
-    # separately (per-probe output aliases defeat exchange reuse), so
-    # without a cache the dim scan + bit-pack agg would execute once
-    # PER PROBE — the cache bounds it to one compute plus n_hashes
-    # reads of the O(m_bits/64)-row result (r6 plan audit: 10 bitmap
-    # builds in dangling_lineitem_bloom's plan before this)
-    bitmap = bloom_bitmap(dim, dk, m_bits=m_bits, n_hashes=n_hashes).cache()
-    probed, maybe = _bloom_maybe_flag(fact, fk, bitmap, m_bits, n_hashes)
-    return probed.where(maybe).select(*fact.columns)
-
-
 def dangling_rows_bloom(
     fact: DataFrame,
     dim: DataFrame,
@@ -217,8 +169,11 @@ def dangling_rows_bloom(
     * **Clean inputs** (dangling ≈ 0, the steady-state validation
       case): almost every row's bits are all set, so the anti-join
       still sees ~the whole fact — Bloom cannot CONFIRM membership,
-      only deny it. Use plain :func:`dangling_rows` there, or
-      :func:`bloom_semi_filter` when it's a selective join you want.
+      only deny it. Use plain :func:`dangling_rows` there. For a
+      selective inner/semi join, rely on Spark's built-in runtime
+      filter (``spark.sql.optimizer.runtime.bloomFilter.enabled``, on
+      by default), which injects this prefilter itself; it never does
+      so for anti-joins, which is why this function exists.
 
     Plan note: the proven/candidate split evaluates the (cheap, pruned,
     map-side) probe chain once per branch — two fact scans. That is
@@ -239,10 +194,11 @@ def dangling_rows_bloom(
         n_keys = dim.where(F.col(dk).isNotNull()).count()
     # ≥64 bits so tiny/empty dims still build a valid 1-word bitmap
     m_bits = max(64, bits_per_key * n_keys)
-    # cached for the same reason as bloom_semi_filter: the probe chain
-    # broadcasts the bitmap once per hash AND the proven/candidate
-    # split evaluates it in both branches — 2·n_hashes builds of the
-    # dim scan + bit-pack agg without it, one with it
+    # cached: each probe join broadcasts the bitmap separately
+    # (per-probe output aliases defeat exchange reuse) AND the
+    # proven/candidate split evaluates the chain in both branches —
+    # 2·n_hashes builds of the dim scan + bit-pack agg without it, one
+    # with it
     bitmap = bloom_bitmap(dim, dk, m_bits=m_bits, n_hashes=n_hashes).cache()
     suspects = fact.where(F.col(fk).isNotNull())
     probed, maybe = _bloom_maybe_flag(suspects, fk, bitmap, m_bits, n_hashes)

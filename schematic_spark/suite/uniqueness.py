@@ -25,42 +25,44 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _key_counts(
+    df: DataFrame, key_cols: tuple[str, ...], count_col: str,
+    salt_buckets: int | None = None,
+) -> DataFrame:
+    """(key…, count_col) rows per distinct key tuple. With
+    ``salt_buckets`` the count is two-phase: phase 1 groups on (key,
+    pmod(hash(row position proxy), S)) so a hot key's rows split across
+    S reducers; phase 2 sums the partials per key."""
+    if salt_buckets is None:
+        return df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(count_col))
+    salt = F.pmod(
+        F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets)
+    ).alias("_salt")
+    return (
+        df.select(*key_cols, salt)
+        .groupBy(*key_cols, "_salt")
+        .agg(F.count(F.lit(1)).alias("_partial"))
+        .groupBy(*key_cols)
+        .agg(F.sum("_partial").alias(count_col))
+    )
+
+
 def duplicate_keys(df: DataFrame, *key_cols: str) -> DataFrame:
     """Keys appearing more than once: (key…, n_dup). One shuffle."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n_dup"))
-        .where(F.col("n_dup") > 1)
-    )
+    return _key_counts(df, key_cols, "n_dup").where(F.col("n_dup") > 1)
 
 
 def duplicate_keys_salted(
     df: DataFrame, *key_cols: str, salt_buckets: int = 32
 ) -> DataFrame:
-    """Two-phase salted duplicate count for skewed keys.
-
-    Phase 1 groups on (key, pmod(hash(full row position proxy), S)) so a
-    hot key's rows split across ``salt_buckets`` reducers; phase 2 sums
-    partials per key. Output identical to :func:`duplicate_keys`.
-    """
-    salt = F.pmod(
-        F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets)
-    ).alias("_salt")
-    phase1 = (
-        df.select(*key_cols, salt)
-        .groupBy(*key_cols, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return (
-        phase1.groupBy(*key_cols)
-        .agg(F.sum("_partial").alias("n_dup"))
-        .where(F.col("n_dup") > 1)
+    """Two-phase salted duplicate count for skewed keys (see
+    :func:`_key_counts`). Output identical to :func:`duplicate_keys`."""
+    return _key_counts(df, key_cols, "n_dup", salt_buckets).where(
+        F.col("n_dup") > 1
     )
 
 
-def uniqueness_report(
-    df: DataFrame, *key_cols: str, salted: bool = False, salt_buckets: int = 32
-) -> DataFrame:
+def uniqueness_report(df: DataFrame, *key_cols: str) -> DataFrame:
     """Single-row report: (n_rows, n_distinct, n_dup_keys, n_dup_rows,
     unique_ok).
 
@@ -71,19 +73,7 @@ def uniqueness_report(
     ``n_rows == n_distinct + n_dup_rows - n_dup_keys`` the moment a
     key is null — and as a bonus the single pipeline is one scan, not
     two.)"""
-    if salted:
-        salt = F.pmod(
-            F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets)
-        ).alias("_salt")
-        grouped = (
-            df.select(*key_cols, salt)
-            .groupBy(*key_cols, "_salt")
-            .agg(F.count(F.lit(1)).alias("_partial"))
-            .groupBy(*key_cols)
-            .agg(F.sum("_partial").alias("n"))
-        )
-    else:
-        grouped = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
+    grouped = _key_counts(df, key_cols, "n")
     dup = F.col("n") > 1
     return (
         grouped.agg(

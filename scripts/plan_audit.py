@@ -5,18 +5,27 @@ no execution — except queries that execute eagerly by design) and
 counts the plan operators that encode the engine's scale claims:
 
 - `BatchEvalPython`  — row-at-a-time Python (must be ZERO everywhere)
-- `ArrowEvalPython`  — vectorized pandas UDFs (media codecs only)
+- `ArrowEvalPython`  — vectorized pandas UDFs (media codecs only: a
+  query whose name does not start with `media_` must have none)
 - `Exchange`         — shuffles
 - nested-loop / cartesian joins (only 1-row scalar attachments allowed)
 - `WholeStageCodegen` spans (JVM-side execution)
 
 Usage: python scripts/plan_audit.py [sf_dir] > BENCH/plan_audit_rN.md
+
+Exits 1 when any plan has a `BatchEvalPython`, a non-media query has an
+`ArrowEvalPython`, or a plan fails to build.
 """
 
 from __future__ import annotations
 
 import re
 import sys
+
+
+def _listed(names: list[str]) -> str:
+    return (f"{len(names)} "
+            f"({', '.join(names) if names else 'ZERO — invariant holds'})")
 
 
 def main() -> int:
@@ -68,12 +77,14 @@ def main() -> int:
         rows.append((name, counts, None))
 
     bad_py = [n for n, c, _ in rows if c and c["batch_py"]]
+    bad_arrow = [n for n, c, _ in rows
+                 if c and c["arrow_py"] and not n.startswith("media_")]
     failed = [(n, e) for n, c, e in rows if c is None]
     print("# Plan audit — all entry queries (executed plans, "
           f"{sf_dir})\n")
     print(f"Queries audited: {len(rows)}; "
-          f"BatchEvalPython anywhere: {len(bad_py)} "
-          f"({', '.join(bad_py) if bad_py else 'ZERO — invariant holds'})")
+          f"BatchEvalPython anywhere: {_listed(bad_py)}; "
+          f"ArrowEvalPython outside media_ queries: {_listed(bad_arrow)}")
     if failed:
         print(f"\nPlan build failures: {failed}")
     print("\n| query | exchanges | arrow_py | bnlj | cartesian |"
@@ -86,7 +97,7 @@ def main() -> int:
             continue
         print(f"| {name} | {c['exchange']} | {c['arrow_py']} |"
               f" {c['bnlj']} | {c['cartesian']} | {c['codegen']} |")
-    return 1 if bad_py or failed else 0
+    return 1 if bad_py or bad_arrow or failed else 0
 
 
 if __name__ == "__main__":

@@ -20,7 +20,7 @@ from schematic_spark.functions import (
     minhash_near_duplicates,
     quality_features,
     quality_score,
-    simhash,
+    simhash_catalyst,
     simhash_near_duplicates,
     synthetic_media,
     train_centroids,
@@ -138,8 +138,8 @@ class TestMinHash:
 class TestSimHash:
     def test_signature_deterministic(self, spark):
         df = spark.createDataFrame([("hello world foo bar",)], "t string")
-        a = df.select(simhash("t")).first()[0]
-        b = df.select(simhash("t")).first()[0]
+        a = df.select(simhash_catalyst("t")).first()[0]
+        b = df.select(simhash_catalyst("t")).first()[0]
         assert a == b != 0
 
     def test_near_duplicates(self, spark):
@@ -358,23 +358,6 @@ class TestMedia:
 
 
 class TestSimhashRound2:
-    def test_vectorized_signatures_pinned(self):
-        """Batch-vectorized FNV simhash pinned against independently
-        computed majority-vote signatures (also guards the uint64
-        vote-wraparound bug: votes must be signed)."""
-        import pandas as pd
-
-        from schematic_spark.functions.dedup import _simhash64_impl
-
-        got = _simhash64_impl(pd.Series([
-            "hello world foo", "The quick brown fox jumps", "x",
-            "", None, "  ",
-        ])).tolist()
-        assert got == [
-            -3733205506852348557, -3822824787099128354,
-            -5808529385363204345, 0, 0, 0,
-        ]
-
     def test_catalyst_simhash_matches_duckdb(self, spark):
         """The md5-based Catalyst signature is reproducible in DuckDB —
         the property the simhash oracle depends on."""
@@ -440,11 +423,25 @@ class TestSimhashRound2:
             "doc_id string, text string",
         )
         pairs = simhash_near_duplicates(
-            df, "text", "doc_id", max_hamming=1, catalyst=True
+            df, "text", "doc_id", max_hamming=1
         ).collect()
         assert [(p["id_a"], p["id_b"], p["hamming"]) for p in pairs] == [
             ("a", "b", 0)
         ]
+
+    def test_tokenless_docs_never_pair(self, spark):
+        """Empty, whitespace-only and NULL texts have no tokens; their
+        degenerate all-zero signature must not pair them at Hamming 0."""
+        df = spark.createDataFrame(
+            [("e1", ""), ("e2", ""), ("w1", "   "), ("w2", "\t \n"),
+             ("n1", None), ("n2", None),
+             ("a", "alpha beta gamma"), ("b", "alpha beta gamma")],
+            "doc_id string, text string",
+        )
+        pairs = simhash_near_duplicates(
+            df, "text", "doc_id", max_hamming=3
+        ).collect()
+        assert [(p["id_a"], p["id_b"]) for p in pairs] == [("a", "b")]
 
 
 class TestNearDupComponents:

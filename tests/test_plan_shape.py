@@ -87,6 +87,16 @@ class TestPlanShapeRound2:
         # no python UDF anywhere — the whole signature is JVM-side
         assert "Python" not in plan, plan
 
+    def test_simhash_near_duplicates_plan_has_no_python(self, spark):
+        from schematic_spark.functions import simhash_near_duplicates
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        pairs = simhash_near_duplicates(docs, "text", "doc_id")
+        pairs.collect()  # the FINAL adaptive plan, not the initial one
+        plan = _plan(pairs)
+        assert "ArrowEvalPython" not in plan, plan
+        assert "BatchEvalPython" not in plan, plan
+
     def test_union_validation_is_shuffle_free(self, spark):
         from pyspark.sql.types import (
             DoubleType, StringType, StructField, StructType,

@@ -242,30 +242,6 @@ class TestBloomReferential:
         with pytest.raises(ValueError, match="scratch columns"):
             dangling_rows_bloom(fact, dim, "k", n_keys=1)
 
-    def test_semi_filter_superset_of_matches_and_exact_after_join(
-        self, spark, docs, media
-    ):
-        from schematic_spark.suite import bloom_semi_filter
-
-        spans = exploded_spans(docs).where(F.col("media_ref").isNotNull())
-        kept = bloom_semi_filter(
-            spans, media, "media_ref", n_keys=CFG.n_media
-        )
-        # no false negatives: every truly-matching row survives
-        n_match = spans.join(
-            media.select("media_ref").dropDuplicates(), "media_ref"
-        ).count()
-        n_kept = kept.count()
-        assert n_kept >= n_match
-        # and the exact join over the filtered fact equals the exact
-        # join over the unfiltered fact (false positives die there)
-        assert (
-            kept.join(
-                media.select("media_ref").dropDuplicates(), "media_ref"
-            ).count()
-            == n_match
-        )
-
 
 def _ref_in_dim(ref: str) -> bool:
     from schematic_spark.generator import media_uuid_py
