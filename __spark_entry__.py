@@ -1077,9 +1077,9 @@ def _q_contamination_src0(spark, sf_dir):
     times across both sides are dropped explicitly — in-plan via a
     window count riding the single gram exchange (the shared_passages
     pattern; r4 VERDICT #5 one-exchange shape). The oracle applies the
-    identical cap over the identical universe (non-NULL sources);
-    log_dropped stays off here because the telemetry job would re-scan
-    both gram sets purely for a counter."""
+    identical cap over the identical universe (non-NULL sources).
+    The cap is a filter inside the plan, so building the query runs no
+    Spark job."""
     from schematic_spark.functions import ngram_contamination
 
     docs = _read(spark, sf_dir, "documents")

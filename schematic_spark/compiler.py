@@ -21,6 +21,7 @@ Cost model at 100 TB scale:
 
 from __future__ import annotations
 
+import operator
 import re
 from typing import Any
 
@@ -31,13 +32,7 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DataType,
-    DecimalType,
     DoubleType,
-    FloatType,
-    IntegerType,
-    IntegralType,
-    LongType,
-    MapType,
     NullType,
     NumericType,
     StringType,
@@ -51,6 +46,8 @@ from .schema.ast import (
     AGt,
     ALe,
     ALt,
+    ArrayConstraint,
+    Constraint,
     NEq,
     NGe,
     NGt,
@@ -67,6 +64,7 @@ from .schema.ast import (
     SUnion,
     TEnum,
     TEq,
+    TextConstraint,
     TGe,
     TGt,
     TLe,
@@ -77,8 +75,6 @@ from .schema.ast import (
 from .schema.interpret import validate_parsed
 
 VIOLATION_DDL = "array<struct<path:string,error:string>>"
-
-_EMPTY = None  # lazily built typed empty array
 
 
 def _empty_violations() -> Column:
@@ -194,61 +190,43 @@ def _interpreted_violations(schema: Schema, value: Column, path: Column) -> Colu
 # Constraint predicates (the §2.1 operator table)
 # ---------------------------------------------------------------------------
 
-def _text_cell(c, value: Column, path: Column) -> Column:
-    ln = F.length(value)
-    if isinstance(c, TEq):
-        ok = ln == F.lit(c.n)
-    elif isinstance(c, TLt):
-        ok = ln < F.lit(c.n)
-    elif isinstance(c, TLe):
-        ok = ln <= F.lit(c.n)
-    elif isinstance(c, TGt):
-        ok = ln > F.lit(c.n)
-    elif isinstance(c, TGe):
-        ok = ln >= F.lit(c.n)
-    elif isinstance(c, TRegex):
-        ok = value.rlike(c.pattern)  # unanchored search = matchTest
-    elif isinstance(c, TEnum):
-        ok = value.isin(*c.values) if c.values else F.lit(False)
-    else:
-        raise TypeError(f"unknown text constraint {c!r}")
-    # null value → ok is null → when() falls through → no violation cell
-    # (structural layer reports the null; mirrors parse-before-validate)
-    return F.when(~ok, _viol(path, c.message()))
+_COMPARE = {
+    TEq: operator.eq, TLt: operator.lt, TLe: operator.le,
+    TGt: operator.gt, TGe: operator.ge,
+    NEq: operator.eq, NLt: operator.lt, NLe: operator.le,
+    NGt: operator.gt, NGe: operator.ge,
+    AEq: operator.eq, ALt: operator.lt, ALe: operator.le,
+    AGt: operator.gt, AGe: operator.ge,
+}
 
 
-def _number_cell(c, value: Column, path: Column) -> Column:
-    lit = F.lit(c.n)
-    if isinstance(c, NEq):
-        ok = value == lit
-    elif isinstance(c, NGt):
-        ok = value > lit
-    elif isinstance(c, NGe):
-        ok = value >= lit
-    elif isinstance(c, NLt):
-        ok = value < lit
-    elif isinstance(c, NLe):
-        ok = value <= lit
-    else:
-        raise TypeError(f"unknown number constraint {c!r}")
-    return F.when(~ok, _viol(path, c.message()))
+def constraint_predicate(c: Constraint, value: Column) -> Column:
+    """THE Catalyst predicate of one constraint: true when ``value``
+    satisfies ``c``, null when ``value`` is null. Both the violation
+    cells and the valid mask are built from it, so the two can never
+    disagree about a row (a mask that passes a violating row reports it
+    Valid)."""
+    if isinstance(c, TRegex):
+        return value.rlike(c.pattern)  # unanchored search = matchTest
+    if isinstance(c, TEnum):
+        return value.isin(*c.values) if c.values else F.lit(False)
+    compare = _COMPARE.get(type(c))
+    if compare is None:
+        raise TypeError(f"unknown constraint {c!r}")
+    if isinstance(c, TextConstraint):
+        value = F.length(value)  # codepoint length
+    elif isinstance(c, ArrayConstraint):
+        value = F.size(value)
+    return compare(value, F.lit(c.n))
 
 
-def _array_cell(c, value: Column, path: Column) -> Column:
-    sz = F.size(value)
-    if isinstance(c, AEq):
-        ok = sz == F.lit(c.n)
-    elif isinstance(c, AGt):
-        ok = sz > F.lit(c.n)
-    elif isinstance(c, AGe):
-        ok = sz >= F.lit(c.n)
-    elif isinstance(c, ALt):
-        ok = sz < F.lit(c.n)
-    elif isinstance(c, ALe):
-        ok = sz <= F.lit(c.n)
-    else:
-        raise TypeError(f"unknown array constraint {c!r}")
-    return F.when(~ok, _viol(path, c.message()))
+def _violation_cells(constraints, value: Column, path: Column) -> Column:
+    # null value → predicate null → when() falls through → no violation
+    # cell (structural layer reports the null; mirrors parse-before-validate)
+    return _compact([
+        F.when(~constraint_predicate(c, value), _viol(path, c.message()))
+        for c in constraints
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -286,14 +264,8 @@ def compile_violations(schema: Schema, value: Column, path: Column) -> Column:
 def _compile_violations_native(
     schema: Schema, value: Column, path: Column
 ) -> Column:
-    if isinstance(schema, SText):
-        return _compact([
-            _text_cell(c, value, path) for c in schema.constraints
-        ])
-    if isinstance(schema, SNumber):
-        return _compact([
-            _number_cell(c, value, path) for c in schema.constraints
-        ])
+    if isinstance(schema, (SText, SNumber)):
+        return _violation_cells(schema.constraints, value, path)
     if isinstance(schema, (SBoolean, SNull)):
         return _empty_violations()  # vacuously valid — Validation.hs:217-218
     if isinstance(schema, SOptional):
@@ -302,9 +274,7 @@ def _compile_violations_native(
             _compile_violations_native(schema.inner, value, path)
         )
     if isinstance(schema, SArray):
-        own = _compact([
-            _array_cell(c, value, path) for c in schema.constraints
-        ])
+        own = _violation_cells(schema.constraints, value, path)
         elem = _elem_violations(schema.item, value, path)
         combined = _concat_all([own, elem]) if elem is not None else own
         return F.when(value.isNull(), _empty_violations()).otherwise(combined)
@@ -372,6 +342,13 @@ UNION_NO_MATCH = "empty union"  # Schema.hs:515 — the alternative chain's
 # terminal failure message when no union branch matches
 
 
+def _null_tolerant(schema: Schema) -> bool:
+    """True for positions where a null is not itself a structural
+    error: optional and null nodes accept it, and a union reports its
+    own no-match."""
+    return isinstance(schema, (SOptional, SNull, SUnion))
+
+
 def structural_possible(schema: Schema) -> bool:
     """True when the subtree can produce structural (decode-layer)
     errors — i.e. :func:`_structural_child` returns a non-None column.
@@ -387,7 +364,7 @@ def structural_possible(schema: Schema) -> bool:
         return True
     if isinstance(schema, SArray):
         return (
-            not isinstance(schema.item, (SOptional, SNull, SUnion))
+            not _null_tolerant(schema.item)
             or structural_possible(schema.item)
         )
     if isinstance(schema, SUnion):
@@ -512,7 +489,7 @@ def compile_structural(schema: Schema, value: Column, path: Column) -> Column:
         for name, fschema in schema.fields:
             fv = value[name]
             fpath = F.concat(path, F.lit("." + name))
-            if not isinstance(fschema, (SOptional, SNull, SUnion)):
+            if not _null_tolerant(fschema):
                 cells.append(
                     F.when(
                         fv.isNull(),
@@ -544,7 +521,7 @@ def _structural_child(schema: Schema, value: Column, path: Column) -> Column | N
             return None
         return _union_structural(schema, value, path)
     if isinstance(schema, SArray):
-        elem_required = not isinstance(schema.item, (SOptional, SNull, SUnion))
+        elem_required = not _null_tolerant(schema.item)
         elem_has_struct = structural_possible(schema.item)
         if not elem_required and not elem_has_struct:
             return None
@@ -736,56 +713,12 @@ def _type_conforms(schema: Schema, dt: DataType, path: str) -> list[str]:
 # Valid-mask fast path
 # ---------------------------------------------------------------------------
 
-def _constraint_ok(schema: Schema, value: Column) -> Column:
-    """AND of this node's own constraint predicates (null value passes —
-    the structural mask covers nulls)."""
+def _constraints_ok(constraints, value: Column) -> Column:
+    """AND of the constraints' predicates (null value passes — the
+    structural mask covers nulls)."""
     ok = F.lit(True)
-    if isinstance(schema, SText):
-        ln = F.length(value)
-        for c in schema.constraints:
-            if isinstance(c, TEq):
-                p = ln == c.n
-            elif isinstance(c, TLt):
-                p = ln < c.n
-            elif isinstance(c, TLe):
-                p = ln <= c.n
-            elif isinstance(c, TGt):
-                p = ln > c.n
-            elif isinstance(c, TGe):
-                p = ln >= c.n
-            elif isinstance(c, TRegex):
-                p = value.rlike(c.pattern)
-            elif isinstance(c, TEnum):
-                p = value.isin(*c.values) if c.values else F.lit(False)
-            ok = ok & F.coalesce(p, F.lit(True))
-    elif isinstance(schema, SNumber):
-        for c in schema.constraints:
-            lit = F.lit(c.n)
-            if isinstance(c, NEq):
-                p = value == lit
-            elif isinstance(c, NGt):
-                p = value > lit
-            elif isinstance(c, NGe):
-                p = value >= lit
-            elif isinstance(c, NLt):
-                p = value < lit
-            elif isinstance(c, NLe):
-                p = value <= lit
-            ok = ok & F.coalesce(p, F.lit(True))
-    elif isinstance(schema, SArray):
-        sz = F.size(value)
-        for c in schema.constraints:
-            if isinstance(c, AEq):
-                p = sz == c.n
-            elif isinstance(c, AGt):
-                p = sz > c.n
-            elif isinstance(c, AGe):
-                p = sz >= c.n
-            elif isinstance(c, ALt):
-                p = sz < c.n
-            elif isinstance(c, ALe):
-                p = sz <= c.n
-            ok = ok & F.coalesce(p, F.lit(True))
+    for c in constraints:
+        ok = ok & F.coalesce(constraint_predicate(c, value), F.lit(True))
     return ok
 
 
@@ -843,12 +776,12 @@ def _mask_node(schema: Schema, value: Column, *, required: bool) -> Column:
                     F.lit(True),
                 )
         return ok
-    own = _constraint_ok(schema, value)
     present = value.isNotNull() if required else F.lit(True)
     if isinstance(schema, (SText, SNumber)):
-        return present & own
+        return present & _constraints_ok(schema.constraints, value)
     if isinstance(schema, SArray):
-        elem_required = not isinstance(schema.item, (SOptional, SNull, SUnion))
+        own = _constraints_ok(schema.constraints, value)
+        elem_required = not _null_tolerant(schema.item)
         # SAME predicate as the structural compiler (structural_possible)
         # so mask and structural can never disagree (round-1 ADVICE bug)
         needs_descent = elem_required or _has_any_constraint(schema.item) \
@@ -863,7 +796,7 @@ def _mask_node(schema: Schema, value: Column, *, required: bool) -> Column:
     if isinstance(schema, SObject):
         ok = present
         for name, fschema in schema.fields:
-            freq = not isinstance(fschema, (SOptional, SNull, SUnion))
+            freq = not _null_tolerant(fschema)
             field_ok = _mask_node(fschema, value[name], required=freq)
             # a null parent struct is itself the failure; guard children
             ok = ok & F.coalesce(field_ok, F.lit(not required))

@@ -470,13 +470,12 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
     n_planes: int = 12,
     seed: int = 42,
-    probe_hamming: int = 1,
     max_bucket_size: int = 500,
 ) -> DataFrame:
     """Near-dup pairs by cosine ≥ τ, LSH-bucketed by random-hyperplane
-    signs so the verify join is per-bucket, not n^2. ``probe_hamming=1``
-    also joins buckets differing in one bit (recall boost near plane
-    boundaries).
+    signs so the verify join is per-bucket, not n^2. Each row also
+    probes the ``n_planes`` buckets one bit away from its own (recall
+    boost near plane boundaries).
 
     ``max_bucket_size`` drops degenerate buckets BEFORE the verify join
     (the same web-scale LSH hygiene as ``minhash_lsh_candidates``): the
@@ -533,13 +532,10 @@ def embedding_near_duplicates(
     sig = sig.join(eligible, "_bucket").select(
         id_col, vec_col, "_bucket"
     )
-    # probe set: exact bucket plus (optionally) 1-bit neighbours
-    probes = [F.col("_bucket")]
-    if probe_hamming >= 1:
-        probes += [
-            F.col("_bucket").bitwiseXOR(F.lit(1 << b))
-            for b in range(n_planes)
-        ]
+    # probe set: exact bucket plus its 1-bit neighbours
+    probes = [F.col("_bucket")] + [
+        F.col("_bucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)
+    ]
     probed = sig.select(
         id_col, vec_col,
         F.explode(F.array(*probes)).alias("_probe"),
@@ -781,7 +777,6 @@ def ngram_contamination(
     id_col: str = "doc_id",
     n: int = 8,
     max_gram_group: int | None = None,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing at least one
     exact word ``n``-gram with any benchmark document — the standard
@@ -812,13 +807,10 @@ def ngram_contamination(
     gram shuffle, no anti-joins. Hot-gram partitions before the filter
     spill via the window sorter rather than OOM. The drop is explicit
     in the plan, never silent — leave the cap None to keep exact
-    recall. ``log_dropped=True`` runs ONE EAGER telemetry job at
-    construction time (a gram-count aggregation over both inputs) and
-    logs how many distinct grams the cap excluded; leave it False in
-    anything hot.
+    recall.
     """
     def gram_rows(df: DataFrame, side: int) -> DataFrame:
-        df = spread_for_compute(df)  # gram hashing is the map-side cost
+        # no spread_for_compute: measured slower (contamination_src0 0.887x)
         toks = df.select(
             F.col(id_col).alias("id"),
             tokens_column(text_col).alias("_t"),
@@ -843,23 +835,6 @@ def ngram_contamination(
         )
 
     tagged = cg.unionAll(bg)
-    if log_dropped:
-        # telemetry-only eager action (stderr, not stdout — stdout
-        # carries the bench/driver JSON protocol); the hot plan below
-        # does not depend on it
-        import sys as _sys
-
-        n_hot = (
-            tagged.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_gram_group)
-            .count()
-        )
-        print(
-            f"ngram_contamination: max_gram_group={max_gram_group} "
-            f"dropped {n_hot} hot gram(s)",
-            file=_sys.stderr,
-        )
     # partition the window by (xxhash64(gram), gram), not gram alone:
     # the window sorter compares 8-byte prefixes first, and natural-
     # language grams share long prefixes ("the quick brown ...") so a

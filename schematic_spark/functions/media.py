@@ -136,9 +136,7 @@ BATCH_TWINS = {
 }
 
 
-def extract_features(
-    df: DataFrame, *, batch_hint: int | None = None, strict: bool = False
-) -> DataFrame:
+def extract_features(df: DataFrame, *, strict: bool = False) -> DataFrame:
     """media table → (media_id, kind, n_bytes, feature[FEATURE_DIM],
     decode_ok, decode_error). Decode failures are rows, not job
     failures (quarantine semantics, like validation).

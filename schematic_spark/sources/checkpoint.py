@@ -245,7 +245,7 @@ def run_validation_checkpointed(
         # pass 2: per-(bucket, verdict) metrics — from the observation
         # (fused) or a tiny hash-agg result (wide-wave fallback)
         if fuse:
-            m = obs.get
+            m = obs.get  # filled by the write's one action (TableFormat.write)
             agg = [
                 {"bucket": b, "verdict": v,
                  "n_rows": m[f"__n_{b}_{v}"] or 0,

@@ -63,7 +63,7 @@ def file_key_ranges(path: str, column: str) -> list[tuple]:
     return sorted(out)
 
 
-def spread_for_compute(df: DataFrame, *, min_tasks: int | None = None) -> DataFrame:
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Fan a compute-dense per-row pipeline out to the cluster's
     parallelism when the scan beneath it provides too few tasks.
 
@@ -86,7 +86,7 @@ def spread_for_compute(df: DataFrame, *, min_tasks: int | None = None) -> DataFr
     float cross-row sum tie-breaking) without checking the consumer.
     """
     sc = df.sparkSession.sparkContext
-    want = min_tasks or sc.defaultParallelism
+    want = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= want:
         return df
     return df.repartition(want)

@@ -58,6 +58,13 @@ class TableFormat:
         raise NotImplementedError
 
     def write(self, df, table, mode="overwrite", partition_by=None) -> str:
+        """Write ``df`` as a new snapshot of ``table``; return its id.
+
+        Runs exactly ONE Spark action over ``df``: the checkpoint
+        layer's fused metrics read an ``Observation`` on ``df``, and an
+        Observation keeps the metrics of the FIRST action only. An extra
+        action (a count, an executing schema probe) would fill it from a
+        job other than the one that wrote the rows."""
         raise NotImplementedError
 
     def snapshots(self, spark, table) -> list[dict]:

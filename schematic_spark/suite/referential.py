@@ -149,7 +149,7 @@ def dangling_rows_bloom(
     dim: DataFrame,
     on: dict[str, str] | str,
     *,
-    n_keys: int | None = None,
+    n_keys: int,
     bits_per_key: int = 10,
     n_hashes: int = 5,
 ) -> DataFrame:
@@ -160,6 +160,11 @@ def dangling_rows_bloom(
     through the exact LEFT ANTI join. Results are bit-identical to
     :func:`dangling_rows` — no false negatives, and false "possibly
     present" verdicts die in the anti-join.
+
+    ``n_keys`` is the caller's estimate of the dim's non-null key count
+    (table metadata, a footer row count). It only sizes the bitmap, so
+    any value gives the same rows; it is required so that building the
+    query runs no Spark job.
 
     Honest cost model — when this wins and when it doesn't:
 
@@ -190,8 +195,6 @@ def dangling_rows_bloom(
         )
     (fk, dk), = on.items()
     _require_same_key_type(fact, fk, dim, dk, "dangling_rows_bloom")
-    if n_keys is None:
-        n_keys = dim.where(F.col(dk).isNotNull()).count()
     # ≥64 bits so tiny/empty dims still build a valid 1-word bitmap
     m_bits = max(64, bits_per_key * n_keys)
     # cached: each probe join broadcasts the bitmap separately

@@ -32,9 +32,11 @@ from .compiler import (
     check_conformance,
     compile_regex_preflight,
     compile_structural,
+    compile_valid_mask,
     compile_violations,
+    spark_type_for,
 )
-from .schema.ast import SObject, Schema, render_path
+from .schema.ast import SNull, SObject, Schema, SOptional, render_path
 from .schema.parser import parse_spec
 from .schema.verifier import verify_schema
 
@@ -192,18 +194,14 @@ def compile_verdict_columns(
     }
 
 
-def validate(
-    df: DataFrame,
-    spec: Schema | dict | str,
-    *,
-    preflight: bool = True,
-    add_missing_optional: bool = True,
-) -> ValidationResult:
+def validate(df: DataFrame, spec: Schema | dict | str) -> ValidationResult:
     """Validate every row of ``df`` against the spec in one projection.
 
-    ``preflight`` enforces the compile-time structural guarantee: the
-    table schema must be able to carry the spec (SchemaMismatchError
-    lists all incompatibilities — the analog of schematic's type error).
+    Spec columns the table lacks are added as typed nulls when the spec
+    allows a null there (optional and null fields). Then the table
+    schema must be able to carry the spec — the compile-time structural
+    guarantee: :class:`SchemaMismatchError` lists every incompatibility
+    (the analog of schematic's type error).
     """
     schema = as_schema(spec)
     if not isinstance(schema, SObject):
@@ -213,17 +211,15 @@ def validate(
         )
     verify_schema(schema)
     compile_regex_preflight(schema)
-    if add_missing_optional:
-        from .schema.ast import SNull, SOptional
-        present = set(df.columns)
-        for name, fschema in schema.fields:
-            if name not in present and isinstance(fschema, (SOptional, SNull)):
-                df = df.withColumn(name, F.lit(None).cast(
-                    _spark_type_ddl(fschema)))
-    if preflight:
-        problems = check_conformance(schema, df.schema)
-        if problems:
-            raise SchemaMismatchError(problems)
+    present = set(df.columns)
+    for name, fschema in schema.fields:
+        if name not in present and isinstance(fschema, (SOptional, SNull)):
+            df = df.withColumn(
+                name, F.lit(None).cast(spark_type_for(fschema).simpleString())
+            )
+    problems = check_conformance(schema, df.schema)
+    if problems:
+        raise SchemaMismatchError(problems)
     reserved = {
         "_row_ok", STRUCTURAL_COL, VIOLATIONS_COL, VERDICT_COL,
         DECODING_ERROR_COL,
@@ -239,8 +235,6 @@ def validate(
     # valid-mask fast path: a flat predicate chain decides "no errors at
     # all" first; the expensive array/path-building trees run only on
     # rows that failed it (on mostly-valid data: predicates only)
-    from .compiler import compile_valid_mask
-
     empty = F.array().cast("array<struct<path:string,error:string>>")
     mask = compile_valid_mask(schema, row)
     annotated = df.withColumn("_row_ok", mask)
@@ -278,9 +272,3 @@ def validate(
         )
     )
     return ValidationResult(annotated=annotated, schema=schema)
-
-
-def _spark_type_ddl(schema: Schema) -> str:
-    from .compiler import spark_type_for
-
-    return spark_type_for(schema).simpleString()

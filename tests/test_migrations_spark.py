@@ -694,3 +694,32 @@ class TestCheckpointEdgeCases:
         fmt_a.write(spark.range(0, 5), "t", mode="append")
         fmt_b.write(spark.range(5, 9), "t", mode="append")
         assert fmt_a.read(spark, "t").count() == 9
+
+
+class TestTableFormatContract:
+    def test_parquet_write_is_one_action_that_fills_observation(
+        self, spark, tmp_path
+    ):
+        """TableFormat.write runs exactly one Spark action over its
+        frame: the checkpoint layer's fused metrics read an Observation
+        that only the write's own action fills."""
+        from pyspark.sql import Observation
+
+        fmt = ParquetDirFormat(root=str(tmp_path))
+        obs = Observation("write_contract")
+        df = spark.range(100).select(
+            F.col("id"), (F.col("id") % 3).alias("bucket")
+        ).observe(obs, F.count(F.lit(1)).alias("n"))
+        sc = spark.sparkContext
+        group = "table-format-write-contract"
+        sc.setJobGroup(group, "TableFormat.write")
+        try:
+            fmt.write(df, "t", mode="append", partition_by=["bucket"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        # checked before .get, which blocks until the observation fills
+        assert obs._jo.future().isCompleted()
+        assert obs.get == {"n": 100}
+        assert fmt.read(spark, "t").count() == 100

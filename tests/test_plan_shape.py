@@ -607,3 +607,49 @@ class TestTpchPlansRound5:
             if "PushedFilters" in ln and "orders.parquet" in ln
         ]
         assert pushed and "o_orderdate" in pushed[0], plan
+
+
+class TestComputeFanOut:
+    """``spread_for_compute`` adds exactly one round-robin exchange over
+    a scan with fewer splits than the session's parallelism and is a
+    no-op otherwise; ``ngram_contamination`` does not call it."""
+
+    def test_contamination_plan_has_no_round_robin(self, spark):
+        from schematic_spark.functions import ngram_contamination
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        assert docs.rdd.getNumPartitions() == 1  # the one-file shape
+        pairs = ngram_contamination(
+            docs.where(F.col("source") != "src0"),
+            docs.where(F.col("source") == "src0"),
+            n=8,
+            max_gram_group=100,
+        )
+        pairs.collect()  # the FINAL adaptive plan, not the initial one
+        assert "RoundRobinPartitioning" not in _plan(pairs), _plan(pairs)
+
+    def test_spread_adds_one_round_robin_on_one_file(self, spark):
+        from collections import Counter
+
+        from schematic_spark.sources import spread_for_compute
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        assert docs.rdd.getNumPartitions() == 1
+        spread = spread_for_compute(docs)
+        # planned, not run: an adaptive plan that has run prints its
+        # initial plan beside the final one
+        assert "RoundRobinPartitioning" not in _plan(docs)
+        assert _plan(spread).count("RoundRobinPartitioning") == 1, \
+            _plan(spread)
+        assert Counter(spread.collect()) == Counter(docs.collect())
+
+    def test_spread_is_identity_with_enough_files(self, spark, tmp_path):
+        from schematic_spark.sources import spread_for_compute
+
+        n = spark.sparkContext.defaultParallelism
+        path = str(tmp_path / "many")
+        spark.range(1000).repartition(n).write.parquet(path)
+        df = spark.read.parquet(path)
+        assert len(list((tmp_path / "many").glob("*.parquet"))) >= n
+        assert df.rdd.getNumPartitions() >= n
+        assert spread_for_compute(df) is df

@@ -217,7 +217,8 @@ class TestBloomReferential:
 
         with pytest.raises(ValueError, match="exactly one key"):
             dangling_rows_bloom(
-                media, media, {"media_ref": "media_ref", "kind": "kind"}
+                media, media, {"media_ref": "media_ref", "kind": "kind"},
+                n_keys=1,
             )
 
     def test_key_type_mismatch_rejected(self, spark):
