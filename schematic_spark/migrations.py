@@ -20,7 +20,10 @@ an older revision. Here:
   re-validated against older revisions **in one pass** — every
   revision's verdict is computed as a column, the winning revision is a
   ``coalesce``-style argmax, and upgrade functions are applied to the
-  older-revision subsets then unioned. No per-row Python; one scan.
+  older-revision subsets then unioned. No per-row Python; one scan;
+* :func:`validate_versioned_json_strings` is its raw-JSON twin: it
+  decodes with the decoder of ``validate_json_strings`` and runs the
+  same dispatch (:func:`_dispatch`).
 
 Deviation noted for parity-hunters: the reference's type-level
 ``DeleteKey`` only removes the *head* field (Migration.hs:46-48 never
@@ -34,16 +37,13 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .compiler import check_conformance, spark_type_for
 from .schema.ast import SArray, Schema, SObject, SOptional
-from .validation import (
-    VERDICT_COL,
-    ValidationResult,
-    compile_verdict_columns,
-    validate,
-)
+from .sources.json_ingest import _decode
+from .validation import VERDICT_COL, compile_verdict_columns
 
 
 # ---------------------------------------------------------------------------
@@ -310,6 +310,63 @@ def drop_field_upgrade(column: str, path: tuple[str, ...], name: str) -> Upgrade
     return up
 
 
+def _dispatch(
+    marked: DataFrame,
+    spec: VersionedSpec,
+    verdicts: dict[str, Column],
+    *,
+    persist: bool,
+    subset_cols: Callable[[str], list],
+    rejected_cols: Callable[[Column], list],
+) -> tuple[DataFrame, DataFrame]:
+    """The newest-first dispatch both versioned entry points share
+    (parseAndValidateWithMList order, Data/Schematic.hs:60-76).
+
+    ``verdicts`` maps every revision to its verdict Column over
+    ``marked``. Each row goes to the newest revision it is Valid under;
+    ``subset_cols(rev)`` projects that revision's rows to its shape,
+    and the chain of registered upgrades lifts them to the top revision
+    before the subsets are unioned. Rows Valid under no revision are
+    projected by ``rejected_cols(top_verdict)``.
+
+    ``persist=True`` caches the frame that carries the verdicts before
+    the per-revision filters: without that barrier predicate pushdown
+    inlines the verdict trees into every subset's Filter and evaluates
+    them again per subset."""
+    revs = [rev for rev, _ in spec.versions()]
+    for rev in revs:
+        marked = marked.withColumn(f"_verdict__{rev}", verdicts[rev])
+    # the loop ends with the NEWEST revision's when() outermost, so the
+    # newest Valid revision wins
+    win = F.lit(None).cast("string")
+    for rev in reversed(revs):
+        win = F.when(
+            F.col(f"_verdict__{rev}") == "Valid", F.lit(rev)
+        ).otherwise(win)
+    marked = marked.withColumn("_winning_revision", win)
+    if persist:
+        marked = marked.cache()
+
+    upgraded: DataFrame | None = None
+    for idx, rev in enumerate(revs):
+        subset = marked.where(F.col("_winning_revision") == rev) \
+                       .select(*subset_cols(rev))
+        # lift from `rev` up through every newer revision's upgrade
+        for newer in reversed(revs[:idx]):
+            up = spec.upgrades.get(newer)
+            if up is None:
+                raise KeyError(
+                    f"no upgrade function registered for revision {newer!r}"
+                )
+            subset = up(subset)
+        upgraded = subset if upgraded is None else (
+            upgraded.unionByName(subset, allowMissingColumns=True)
+        )
+    rejected = marked.where(F.col("_winning_revision").isNull()) \
+                     .select(*rejected_cols(F.col(f"_verdict__{revs[0]}")))
+    return upgraded, rejected
+
+
 def validate_versioned(
     df: DataFrame, spec: VersionedSpec, *, persist: bool = True
 ) -> tuple[DataFrame, DataFrame]:
@@ -320,8 +377,7 @@ def validate_versioned(
     * rows valid under the TOP revision pass through;
     * rows invalid at top but valid under an older revision are run
       through the upgrade chain back up to top, then unioned in;
-    * rows valid nowhere land in ``rejected`` with the top revision's
-      verdict columns attached.
+    * rows valid nowhere land in ``rejected`` with the input's columns.
 
     Physical shape: one scan computes a verdict per revision (all plain
     column expressions); the revision split is a set of filters over the
@@ -331,22 +387,20 @@ def validate_versioned(
     each revision filter re-reads the (column-pruned) scan instead of
     materializing the whole table.
 
-    Revisions whose spec the frame's column TYPES cannot carry (e.g. an
-    Update changed number→text, so the old revision's regex would not
-    even analyze against the new numeric column) are skipped: their
-    verdict is a constant non-Valid, exactly the per-document semantics
-    (the reference's parse at that revision would fail).
+    Every revision passes the same preflight as ``validate()`` while the
+    query is built. Revisions whose spec the frame's column TYPES cannot
+    carry (e.g. an Update changed number→text, so the old revision's
+    regex would not even analyze against the new numeric column) are
+    skipped: their verdict is a constant non-Valid, exactly the
+    per-document semantics (the reference's parse at that revision
+    would fail).
     """
     versions = spec.versions()
-    top_rev, top_schema = versions[0]
 
     # columns some revision references but the frame lacks → typed NULLs
     # (they validate as missing-required / optional-absent, exactly the
     # per-document semantics), dropped again before upgrades run
-    from .compiler import check_conformance, spark_type_for
-
     present = set(df.columns)
-    added: list[str] = []
     marked = df
     for _, schema in versions:
         for name, fschema in schema.fields:
@@ -356,53 +410,20 @@ def validate_versioned(
                     F.lit(None).cast(spark_type_for(fschema).simpleString()),
                 )
                 present.add(name)
-                added.append(name)
 
-    verdict_cols: dict[str, str] = {}
+    verdicts = {}
     for rev, schema in versions:
-        cname = f"_verdict__{rev}"
+        # compiled for skipped revisions too, so every one is preflighted
+        verdict = compile_verdict_columns(schema)[VERDICT_COL]
+        # frame types can't carry this revision — constant non-Valid
         if check_conformance(schema, marked.schema):
-            # frame types can't carry this revision — constant non-Valid
-            marked = marked.withColumn(cname, F.lit("DecodingError"))
-        else:
-            cols = compile_verdict_columns(schema)
-            marked = marked.withColumn(cname, cols[VERDICT_COL])
-        verdict_cols[rev] = cname
-
-    # winning revision: first (newest) revision whose verdict is Valid
-    win_expr = F.lit(None).cast("string")
-    for rev, _ in reversed(versions):
-        win_expr = F.when(
-            F.col(verdict_cols[rev]) == "Valid", F.lit(rev)
-        ).otherwise(win_expr)
-    # the loop above ends with the NEWEST revision's when() outermost,
-    # so newest-valid wins — parseAndValidateWithMList order
-    marked = marked.withColumn("_winning_revision", win_expr)
-    if persist:
-        marked = marked.cache()
-
-    helper_cols = list(verdict_cols.values()) + ["_winning_revision"] + added
-    upgraded: DataFrame | None = None
-    revs_newest_first = [rev for rev, _ in versions]
-    for idx, rev in enumerate(revs_newest_first):
-        subset = marked.where(F.col("_winning_revision") == rev) \
-                       .drop(*helper_cols)
-        # lift from `rev` up through every newer revision's upgrade
-        for newer in reversed(revs_newest_first[:idx]):
-            up = spec.upgrades.get(newer)
-            if up is None:
-                raise KeyError(
-                    f"no upgrade function registered for revision {newer!r}"
-                )
-            subset = up(subset)
-        upgraded = subset if upgraded is None else (
-            upgraded.unionByName(subset, allowMissingColumns=True)
-        )
-
-    rejected = marked.where(F.col("_winning_revision").isNull()) \
-                     .drop(*helper_cols)
-    return upgraded, rejected
-
+            verdict = F.lit("DecodingError")
+        verdicts[rev] = verdict
+    return _dispatch(
+        marked, spec, verdicts, persist=persist,
+        subset_cols=lambda rev: df.columns,
+        rejected_cols=lambda top_verdict: df.columns,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -416,233 +437,48 @@ def validate_versioned_json_strings(
     """Raw JSON bytes → versioned parse — the engine twin of
     ``decodeAndValidateVersionedWithMList``
     (``/root/reference/src/Data/Schematic.hs:87-103``): decode the string
-    column ONCE, dispatch each row to the newest revision it is Valid
-    under (parseAndValidateWithMList order, Data/Schematic.hs:60-76),
-    lift older-revision rows through the registered upgrade chain, and
-    union back to the top revision's shape.
+    column ONCE with the decoder of ``validate_json_strings``
+    (``sources.json_ingest._decode``, one typed parse per
+    field-type-compatible group of revisions), then run the same
+    newest-first dispatch as :func:`validate_versioned`.
 
     Returns ``(upgraded_valid, rejected)``; rejected rows (malformed
     JSON or valid under no revision) keep the original columns plus
     ``_verdict`` = the TOP revision's verdict.
 
-    Physical shape — one scan, ONE ``from_json`` for the whole chain
-    (not one per revision): revisions are grouped by field-type
-    compatibility and each GROUP gets a single parse against its
-    union-of-fields struct; a chain of AddKey/DeleteKey migrations is
-    one group, and only a type-changing ``Update`` opens a second.
-    Per-revision semantics are then derived from the shared parse:
-
-    * *malformed* is purely syntactic (``json_object_keys`` is NULL for
-      invalid JSON and non-object top levels — the only verdict forced
-      onto every revision);
-    * a field whose raw token is present but whose typed slot parsed
-      NULL failed THAT revision's type — a per-revision DecodingError,
-      so a doc rejected by the newest revision's types still dispatches
-      to an older revision it satisfies (the fallback semantics
-      ``validate_versioned`` implements via conformance-skip);
-    * required-SNull fields never enter the parse struct (NullType
-      can't ride ``from_json``); presence/kind ride ``json_object_keys``
-      + the raw token, as in ``validate_json_strings``;
-    * default-encoding unions decode via the variant kind dispatch
-      (named/tagged unions are plain structs and ride the parse).
-
-    The raw tokens come from ONE ``json_tuple`` generator (a single
-    extra streaming pass per row), not N ``get_json_object`` parses.
+    A revision's verdict is DecodingError when the document is
+    malformed or the revision's decode errors are non-empty (a type
+    failure at that revision's types, or a bad required-SNull field),
+    so a doc rejected by the newest revision's types still dispatches
+    to an older revision it satisfies. Otherwise the verdict comes from
+    :func:`~schematic_spark.validation.compile_verdict_columns` over the
+    revision's decoded fields.
 
     ``persist=True`` (default) caches the annotated frame before the
     per-revision dispatch filters. This is not just the
     ``validate_versioned`` memory/recompute trade: without the cache
     barrier, predicate pushdown inlines the verdict expression trees —
-    including the ``from_json`` — into each subset's Filter condition,
+    including the typed parse — into each subset's Filter condition,
     re-parsing the document once per inlined reference. Pass
     ``persist=False`` only when the table cannot fit and you accept
     one full re-parse pass per revision subset.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    from .compiler import spark_type_for
-    from .schema.ast import SNull
-    from .sources.json_ingest import (
-        check_raw_union_support,
-        is_variant_union,
-        variant_union_carrier,
-        with_raw_tokens,
-    )
-    from .validation import compile_verdict_columns
-
     versions = spec.versions()
-    top_rev = versions[0][0]
+    decoded, malformed, per_rev = _decode(
+        df, json_col, [schema for _, schema in versions]
+    )
+    fields, verdicts = {}, {}
+    for (rev, schema), (rev_fields, errors) in zip(versions, per_rev):
+        fields[rev] = rev_fields
+        cols = compile_verdict_columns(schema, row=F.struct(*rev_fields))
+        verdicts[rev] = F.when(
+            malformed | (F.size(errors) > 0), F.lit("DecodingError")
+        ).otherwise(cols[VERDICT_COL])
     passthrough = [c for c in df.columns if c != json_col]
-
-    def _split(schema):
-        nulls, vunions, data = [], [], []
-        for n, fs in schema.fields:
-            if isinstance(fs, SNull):
-                nulls.append(n)
-            elif is_variant_union(fs):
-                vunions.append((n, fs))
-            else:
-                data.append((n, fs))
-        return nulls, vunions, data
-
-    token_names: list[str] = []
-
-    def _want_token(n: str) -> None:
-        if n not in token_names:
-            token_names.append(n)
-
-    # ---- parse groups: one from_json per field-type-compatible set ----
-    groups: list[dict] = []          # field name -> Spark DataType
-    rev_group: dict[str, int] = {}
-    rev_split: dict[str, tuple] = {}
-    for rev, schema in versions:
-        check_raw_union_support(schema)
-        nulls, vunions, data = _split(schema)
-        rev_split[rev] = (nulls, vunions, data)
-        fields = {n: spark_type_for(fs) for n, fs in data}
-        gi = None
-        for j, g in enumerate(groups):
-            if all(g.get(n, t) == t for n, t in fields.items()):
-                g.update(fields)
-                gi = j
-                break
-        if gi is None:
-            groups.append(dict(fields))
-            gi = len(groups) - 1
-        rev_group[rev] = gi
-        for n, _ in data:
-            _want_token(n)   # typefail detection
-        for n in nulls:
-            _want_token(n)   # explicit-null vs wrong-value
-
-    marked = with_raw_tokens(df, json_col, token_names)
-    marked = marked.withColumn(
-        "_keys", F.json_object_keys(F.col(json_col))
+    return _dispatch(
+        decoded, spec, verdicts, persist=persist,
+        subset_cols=lambda rev: passthrough + fields[rev],
+        rejected_cols=lambda top_verdict: df.columns + [
+            top_verdict.alias(VERDICT_COL)
+        ],
     )
-    for j, g in enumerate(groups):
-        if not g:  # revision with no parseable fields (all SNull/union)
-            continue
-        st = StructType([StructField(n, t, True) for n, t in g.items()])
-        marked = marked.withColumn(
-            f"_doc__g{j}",
-            F.from_json(F.col(json_col), st, {"mode": "PERMISSIVE"}),
-        )
-
-    # ---- variant unions (deduped across revisions) ----
-    union_col_names: dict[tuple, str] = {}
-    all_vunions = [
-        (n, fs) for _, (_, vus, _) in rev_split.items() for n, fs in vus
-    ]
-    if all_vunions:
-        marked = marked.withColumn(
-            "_variant", F.try_parse_json(F.col(json_col))
-        )
-        kind_done: set[str] = set()
-        from .sources.json_ingest import _json_path
-        for n, fs in all_vunions:
-            if n not in kind_done:
-                marked = marked.withColumn(
-                    f"_kind__{n}",
-                    F.schema_of_variant(F.try_variant_get(
-                        F.col("_variant"), _json_path(n), "variant"
-                    )),
-                )
-                kind_done.add(n)
-        for idx, (n, fs) in enumerate(all_vunions):
-            key = (n, fs)
-            if key in union_col_names:
-                continue
-            carrier = variant_union_carrier(
-                F.col("_variant"), F.col(f"_kind__{n}"), n, fs
-            )
-            cname = f"_u__{len(union_col_names)}"
-            marked = marked.withColumn(cname, carrier)
-            union_col_names[key] = cname
-
-    malformed = F.col(json_col).isNull() | F.col("_keys").isNull()
-
-    def _present(n: str):
-        return F.coalesce(
-            F.array_contains(F.col("_keys"), n), F.lit(False)
-        )
-
-    def _row_pieces(rev: str, schema) -> list:
-        """Columns for the revision's row struct, in schema field order."""
-        nulls, vunions, data = rev_split[rev]
-        vmap = {n: union_col_names[(n, fs)] for n, fs in vunions}
-        doc = F.col(f"_doc__g{rev_group[rev]}")
-        pieces = []
-        for n, fs in schema.fields:
-            if n in nulls:
-                pieces.append(F.lit(None).cast("void").alias(n))
-            elif n in vmap:
-                pieces.append(F.col(vmap[n]).alias(n))
-            else:
-                pieces.append(doc[n].alias(n))
-        return pieces
-
-    verdict_cols: dict[str, str] = {}
-    for rev, schema in versions:
-        nulls, vunions, data = rev_split[rev]
-        # per-revision type failure: raw token present, typed slot null
-        doc = F.col(f"_doc__g{rev_group[rev]}")
-        typefail = F.lit(False)
-        for n, _ in data:
-            typefail = typefail | (
-                doc[n].isNull() & F.col(f"_raw__{n}").isNotNull()
-            )
-        # required SNull: missing key OR a non-null value both reject
-        snull_bad = F.lit(False)
-        for n in nulls:
-            snull_bad = snull_bad | (
-                ~_present(n) | F.col(f"_raw__{n}").isNotNull()
-            )
-        row = F.struct(*_row_pieces(rev, schema))
-        cols = compile_verdict_columns(schema, row=row)
-        cname = f"_jverdict__{rev}"
-        marked = marked.withColumn(
-            cname,
-            F.when(malformed | typefail | snull_bad,
-                   F.lit("DecodingError"))
-            .otherwise(cols[VERDICT_COL]),
-        )
-        verdict_cols[rev] = cname
-
-    win_expr = F.lit(None).cast("string")
-    for rev, _ in reversed(versions):
-        win_expr = F.when(
-            F.col(verdict_cols[rev]) == "Valid", F.lit(rev)
-        ).otherwise(win_expr)
-    marked = marked.withColumn("_winning_revision", win_expr)
-    if persist:
-        marked = marked.cache()
-
-    revs_newest_first = [rev for rev, _ in versions]
-    schemas = dict(versions)
-    upgraded: DataFrame | None = None
-    for idx, rev in enumerate(revs_newest_first):
-        schema = schemas[rev]
-        subset = marked.where(
-            F.col("_winning_revision") == rev
-        ).select(
-            *[F.col(c) for c in passthrough],
-            *_row_pieces(rev, schema),
-        )
-        for newer in reversed(revs_newest_first[:idx]):
-            up = spec.upgrades.get(newer)
-            if up is None:
-                raise KeyError(
-                    f"no upgrade function registered for revision {newer!r}"
-                )
-            subset = up(subset)
-        upgraded = subset if upgraded is None else (
-            upgraded.unionByName(subset, allowMissingColumns=True)
-        )
-
-    rejected = marked.where(
-        F.col("_winning_revision").isNull()
-    ).select(
-        *[F.col(c) for c in df.columns],
-        F.col(verdict_cols[top_rev]).alias("_verdict"),
-    )
-    return upgraded, rejected

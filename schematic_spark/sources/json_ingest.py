@@ -26,6 +26,10 @@ with the versioned entry point): JSON numbers COERCE into text fields
 type-mismatched field nested INSIDE a struct nulls only that inner
 field (outer struct survives; a required inner field then reports
 missing-field instead of expected-Kind, an optional one parses None).
+
+One decoder, :func:`_decode`, serves both raw-JSON entry points:
+:func:`validate_json_strings` here and
+``migrations.validate_versioned_json_strings``.
 """
 
 from __future__ import annotations
@@ -34,9 +38,17 @@ import re as _re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
-from ..compiler import VIOLATION_DDL, spark_type_for
+from ..compiler import (
+    UNION_NO_MATCH,
+    VIOLATION_DDL,
+    _compact,
+    _kind_label,
+    _union_no_match_possible,
+    _viol,
+    spark_type_for,
+)
 from ..schema.ast import (
     SArray,
     SBoolean,
@@ -49,11 +61,10 @@ from ..schema.ast import (
     missing_field_message,
 )
 from ..validation import (
-    DECODING_ERROR_COL,
     STRUCTURAL_COL,
-    VERDICT_COL,
     VIOLATIONS_COL,
     ValidationResult,
+    _verdict_and_error,
     as_schema,
     validate,
 )
@@ -65,12 +76,6 @@ _SIMPLE_KEY = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 def _json_path(name: str) -> str:
     return f"$.{name}" if _SIMPLE_KEY.match(name) else f"$['{name}']"
-
-
-def _cell(path: str, message: str):
-    return F.struct(
-        F.lit(path).alias("path"), F.lit(message).alias("error")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -205,20 +210,29 @@ def with_raw_tokens(df: DataFrame, json_col: str, names) -> DataFrame:
     return df
 
 
-def _raw_union_col(variant_col, kind_col, name: str, union: SUnion):
-    """struct<alt_i…> for a top-level union field decoded from the
-    variant: branch i holds the payload iff the JSON kind matches
-    alternative i (kinds are distinct, so at most one branch fires)."""
-    alts = []
-    for i, alt in enumerate(union.alternatives):
-        ddl = spark_type_for(alt).simpleString()
-        alts.append(
-            F.when(
-                _variant_kind_pred(alt, kind_col),
-                F.try_variant_get(variant_col, _json_path(name), ddl),
-            ).alias(f"alt_{i}")
+def variant_union_carrier(variant_col, kind_col, name: str, fs):
+    """The ``alt_i`` struct carrier for one variant-decoded top-level
+    union field: branch i holds the payload iff the JSON kind matches
+    alternative i (kinds are distinct, so at most one branch fires).
+    An SOptional wrap maps a missing key (kind NULL) and an explicit
+    null (VOID) to None. The one place the kind-dispatch leniencies
+    live; :func:`_decode` is its caller."""
+    union = fs.inner if isinstance(fs, SOptional) else fs
+    carrier = F.struct(*[
+        F.when(
+            _variant_kind_pred(alt, kind_col),
+            F.try_variant_get(
+                variant_col, _json_path(name),
+                spark_type_for(alt).simpleString(),
+            ),
+        ).alias(f"alt_{i}")
+        for i, alt in enumerate(union.alternatives)
+    ])
+    if isinstance(fs, SOptional):
+        carrier = F.when(
+            kind_col.isNotNull() & (kind_col != "VOID"), carrier
         )
-    return F.struct(*alts)
+    return carrier
 
 
 def is_variant_union(fs) -> bool:
@@ -236,20 +250,141 @@ def is_variant_union(fs) -> bool:
     )
 
 
-def variant_union_carrier(variant_col, kind_col, name: str, fs):
-    """The ``alt_i`` struct carrier for one variant-decoded union
-    field, including the SOptional wrap (missing key → kind NULL,
-    explicit null → VOID; both become None). The ONE place the subtle
-    kind-dispatch leniencies live — shared by ``validate_json_strings``
-    and ``migrations.validate_versioned_json_strings`` so a fix in one
-    path cannot silently miss the other."""
-    union = fs.inner if isinstance(fs, SOptional) else fs
-    carrier = _raw_union_col(variant_col, kind_col, name, union)
-    if isinstance(fs, SOptional):
-        carrier = F.when(
-            kind_col.isNotNull() & (kind_col != "VOID"), carrier
+def _mismatch_message(fs) -> str | None:
+    """The DecodingError for a field whose raw token is present but
+    whose typed ``from_json`` slot parsed NULL: the reference's
+    ``expected <Kind>`` (interpret.py:101-126). None where the
+    compiler's union no-match machinery owns the case: a REQUIRED
+    union that can no-match. An optional union needs the check (the
+    optional would absorb the nulled slot as absent: a silent
+    false-Valid), and so does a branch_fields union with an SNull
+    alternative (its all-null struct IS the SNull match)."""
+    target = fs.inner if isinstance(fs, SOptional) else fs
+    if not isinstance(target, SUnion):
+        return f"expected {_kind_label(target)}"
+    if _union_no_match_possible(target) and not isinstance(fs, SOptional):
+        return None
+    return UNION_NO_MATCH
+
+
+def _decode(df: DataFrame, json_col: str, schemas: list[SObject]):
+    """Decode the raw-JSON column ONCE for every schema — the one
+    raw-JSON decoder behind both raw-JSON entry points.
+
+    Returns ``(decoded, malformed, per_schema)``: ``decoded`` is ``df``
+    plus the shared decode columns, ``malformed`` is the purely
+    syntactic check (``json_object_keys`` is NULL for invalid JSON and
+    non-object top levels), and ``per_schema`` holds one
+    ``(fields, errors)`` pair per schema: the top-level field Columns in
+    schema field order (each aliased to its name) and the array of that
+    schema's decode errors, SNull cells first, then typed-slot
+    mismatches.
+
+    Shared columns, each added once:
+
+    * one ``json_tuple`` extracting every field's raw token (NULL =
+      missing key, literal null, or malformed document);
+    * ``_keys`` (``json_object_keys``): the malformed check and SNull
+      key presence;
+    * one ``from_json`` per field-type-compatible group of schemas: a
+      chain of AddKey/DeleteKey revisions is one group, a type-changing
+      ``Update`` opens a second;
+    * for default-encoding unions, one ``try_parse_json`` plus one kind
+      and one carrier column per distinct field, MATERIALIZED so later
+      expressions reference columns, never re-inlined parse trees
+      (CLAUDE.md CSE rule).
+
+    Required-SNull fields carry no data and never enter the parse
+    struct (NullType cannot ride ``from_json``): missing key → the
+    missing-field error, explicit ``null`` → fine, any other value →
+    ``expected Null``. A field whose raw token is present but whose
+    typed slot parsed NULL failed THAT schema's type."""
+    groups: list[dict] = []       # field name -> Spark type
+    group_of: list[int] = []
+    tokens: list[str] = []
+    vunions: list[tuple] = []
+    for schema in schemas:
+        check_raw_union_support(schema)
+        data = {}
+        for n, fs in schema.fields:
+            if is_variant_union(fs):
+                if (n, fs) not in vunions:
+                    vunions.append((n, fs))
+                continue
+            if n not in tokens:
+                tokens.append(n)
+            if not isinstance(fs, SNull):
+                data[n] = spark_type_for(fs)
+        gi = next(
+            (j for j, g in enumerate(groups)
+             if all(g.get(n, t) == t for n, t in data.items())),
+            len(groups),
         )
-    return carrier
+        if gi == len(groups):
+            groups.append({})
+        groups[gi].update(data)
+        group_of.append(gi)
+
+    decoded = with_raw_tokens(df, json_col, tokens)
+    decoded = decoded.withColumn(
+        "_keys", F.json_object_keys(F.col(json_col))
+    )
+    for j, g in enumerate(groups):
+        if g:  # a schema with no parseable fields (all SNull/union)
+            st = StructType([StructField(n, t, True) for n, t in g.items()])
+            decoded = decoded.withColumn(
+                f"_doc__g{j}",
+                F.from_json(F.col(json_col), st, {"mode": "PERMISSIVE"}),
+            )
+    if vunions:
+        decoded = decoded.withColumn(
+            "_variant", F.try_parse_json(F.col(json_col))
+        )
+        for n in dict.fromkeys(n for n, _ in vunions):
+            decoded = decoded.withColumn(
+                f"_kind__{n}",
+                F.schema_of_variant(F.try_variant_get(
+                    F.col("_variant"), _json_path(n), "variant"
+                )),
+            )
+        for i, (n, fs) in enumerate(vunions):
+            decoded = decoded.withColumn(f"_u__{i}", variant_union_carrier(
+                F.col("_variant"), F.col(f"_kind__{n}"), n, fs
+            ))
+
+    per_schema = []
+    for schema, gi in zip(schemas, group_of):
+        doc = F.col(f"_doc__g{gi}")
+        fields, null_cells, mismatch_cells = [], [], []
+        for n, fs in schema.fields:
+            raw = F.col(f"_raw__{n}")
+            if isinstance(fs, SNull):
+                present = F.coalesce(
+                    F.array_contains(F.col("_keys"), n), F.lit(False)
+                )
+                null_cells.append(F.when(
+                    ~present,
+                    _viol(F.lit(""), missing_field_message(n, SNull())),
+                ))
+                null_cells.append(F.when(
+                    present & raw.isNotNull(),
+                    _viol(F.lit(f".{n}"), "expected Null"),
+                ))
+                fields.append(F.lit(None).cast("void").alias(n))
+            elif is_variant_union(fs):
+                fields.append(F.col(f"_u__{vunions.index((n, fs))}").alias(n))
+            else:
+                message = _mismatch_message(fs)
+                if message is not None:
+                    mismatch_cells.append(F.when(
+                        doc[n].isNull() & raw.isNotNull(),
+                        _viol(F.lit(f".{n}"), message),
+                    ))
+                fields.append(doc[n].alias(n))
+        errors = _compact(null_cells + mismatch_cells).cast(VIOLATION_DDL)
+        per_schema.append((fields, errors))
+    malformed = F.col(json_col).isNull() | F.col("_keys").isNull()
+    return decoded, malformed, per_schema
 
 
 def validate_json_strings(
@@ -257,165 +392,36 @@ def validate_json_strings(
 ) -> ValidationResult:
     """Parse a string column of JSON documents against the spec and
     validate. Malformed documents get verdict DecodingError with
-    message ``"malformed json"``; everything else follows the standard
-    3-way verdict."""
+    message ``"malformed json"``; otherwise the structural errors are
+    the decode errors of :func:`_decode` followed by those of
+    :func:`~schematic_spark.validation.validate`, run over the decoded
+    fields, and the verdict follows the standard 3-way rule."""
     schema = as_schema(spec)
     if not isinstance(schema, SObject):
         raise TypeError("top-level spec must be an object")
-    check_raw_union_support(schema)
-
-    # required-SNull fields carry no data — parse every OTHER field,
-    # and check SNull fields straight off the raw JSON (presence + kind);
-    # default-encoding unions decode via the variant kind dispatch
-    null_fields = [n for n, fs in schema.fields if isinstance(fs, SNull)]
-    variant_unions = [
-        (n, fs) for n, fs in schema.fields if is_variant_union(fs)
-    ]
-    data_fields = [
-        (n, fs) for n, fs in schema.fields
-        if not isinstance(fs, SNull) and not is_variant_union(fs)
-    ]
-    st = StructType([
-        StructField(n, spark_type_for(fs), True) for n, fs in data_fields
-    ])
-    # one json_tuple pass extracts every field's raw token (NULL =
-    # missing key or literal null); one json_object_keys call drives
-    # both the syntactic-malformed check and SNull key presence
-    parsed = with_raw_tokens(
-        df, json_col,
-        [n for n, _ in data_fields] + null_fields,
-    )
-    parsed = parsed.withColumn(
-        "_keys", F.json_object_keys(F.col(json_col))
-    )
-    if data_fields:
-        parsed = parsed.withColumn(
-            "_doc",
-            F.from_json(F.col(json_col), st, {"mode": "PERMISSIVE"}),
-        )
-    union_cols = []
-    if variant_unions:
-        # one variant parse per row, one kind column per union field —
-        # MATERIALIZED as columns so the branch expressions reference
-        # columns, never re-inlined parse trees (CLAUDE.md CSE rule)
-        parsed = parsed.withColumn(
-            "_variant", F.try_parse_json(F.col(json_col))
-        )
-        for name, fs in variant_unions:
-            parsed = parsed.withColumn(
-                f"_kind__{name}",
-                F.schema_of_variant(F.try_variant_get(
-                    F.col("_variant"), _json_path(name), "variant"
-                )),
-            )
-        for name, fs in variant_unions:
-            union_cols.append(variant_union_carrier(
-                F.col("_variant"), F.col(f"_kind__{name}"), name, fs
-            ).alias(name))
-    flat_cols = [
-        F.col("_doc")[name].alias(name) for name, _ in data_fields
-    ] + union_cols + [
-        F.lit(None).cast("void").alias(name) for name in null_fields
-    ]
+    decoded, malformed, [(fields, errors)] = _decode(df, json_col, [schema])
     passthrough = [c for c in df.columns if c != json_col] + (
         [json_col] if keep_raw else []
     )
-
-    # missing-key vs explicit-null for required SNull fields: presence
-    # via json_object_keys (null for non-objects → treated as missing),
-    # value kind via the raw token (NULL for both missing and literal
-    # null — presence disambiguates; non-NULL ⇒ some other value)
-    null_cells = []
-    for name in null_fields:
-        present = F.coalesce(
-            F.array_contains(F.col("_keys"), name), F.lit(False)
-        )
-        raw_val = F.col(f"_raw__{name}")
-        null_cells.append(F.when(
-            ~present, _cell("", missing_field_message(name, SNull()))
-        ))
-        null_cells.append(F.when(
-            present & raw_val.isNotNull(),
-            _cell(f".{name}", "expected Null"),
-        ))
-    null_errs = (
-        F.array_compact(F.array(*null_cells)).cast(VIOLATION_DDL)
-        if null_cells else F.array().cast(VIOLATION_DDL)
-    )
-
-    # structural-parse layer: raw token present but typed slot NULL =
-    # type failure at that field — the reference's "expected <Kind>"
-    # DecodingError (interpret.py:101-126). Union-typed fields where
-    # the compiler's no-match machinery can fire are excluded (it owns
-    # that case); a branch_fields union with an SNull alternative is
-    # the exception — there _union_matched is constant-true (an all-null
-    # struct IS the SNull match), so a wrong-kind raw value that
-    # from_json nulls out would otherwise validate as a false Valid.
-    # The raw token disambiguates: non-null token + null struct slot =
-    # the value matched no alternative.
-    from ..compiler import UNION_NO_MATCH, _kind_label, _union_no_match_possible
-
-    mismatch_cells = []
-    for name, fs in data_fields:
-        target = fs.inner if isinstance(fs, SOptional) else fs
-        if isinstance(target, SUnion):
-            # the compiler's no-match machinery only covers REQUIRED
-            # unions: for an SOptional wrap, from_json nulls the slot
-            # on a wrong-kind value and the optional treats null as
-            # absent — without the raw-token check here that was a
-            # silent false-Valid (round-3 review finding)
-            if _union_no_match_possible(target) \
-                    and not isinstance(fs, SOptional):
-                continue
-            mismatch_cells.append(F.when(
-                F.col("_doc")[name].isNull()
-                & F.col(f"_raw__{name}").isNotNull(),
-                _cell(f".{name}", UNION_NO_MATCH),
-            ))
-            continue
-        mismatch_cells.append(F.when(
-            F.col("_doc")[name].isNull()
-            & F.col(f"_raw__{name}").isNotNull(),
-            _cell(f".{name}", f"expected {_kind_label(target)}"),
-        ))
-    mismatch_errs = (
-        F.array_compact(F.array(*mismatch_cells)).cast(VIOLATION_DDL)
-        if mismatch_cells else F.array().cast(VIOLATION_DDL)
-    )
-
-    flat = parsed.select(
+    # the annotated frame lists typed fields, then variant unions, then
+    # SNull fields (a stable sort of the schema-ordered field Columns)
+    kinds = [int(is_variant_union(fs)) + 2 * isinstance(fs, SNull)
+             for _, fs in schema.fields]
+    fields = [c for _, c in sorted(zip(kinds, fields), key=lambda t: t[0])]
+    flat = decoded.select(
         *[F.col(c) for c in passthrough],
-        (
-            F.col(json_col).isNull() | F.col("_keys").isNull()
-        ).alias("_malformed"),
-        null_errs.alias("_null_errs"),
-        mismatch_errs.alias("_mismatch_errs"),
-        *flat_cols,
+        malformed.alias("_malformed"),
+        errors.alias("_decode_errs"),
+        *fields,
     )
-    res = validate(flat, schema)
-    ann = res.annotated
-    malformed_err = F.array(_cell("", MALFORMED))
-    structural = (
-        F.when(F.col("_malformed"), malformed_err)
-        .otherwise(F.concat(
-            F.col("_null_errs"), F.col("_mismatch_errs"),
-            F.col(STRUCTURAL_COL),
-        ))
+    ann = validate(flat, schema).annotated
+    ann = ann.withColumn(
+        STRUCTURAL_COL,
+        F.when(
+            F.col("_malformed"), F.array(_viol(F.lit(""), MALFORMED))
+        ).otherwise(F.concat(F.col("_decode_errs"), F.col(STRUCTURAL_COL))),
     )
-    ann = (
-        ann
-        .withColumn(STRUCTURAL_COL, structural)
-        .withColumn(
-            VERDICT_COL,
-            F.when(F.size(F.col(STRUCTURAL_COL)) > 0, F.lit("DecodingError"))
-            .when(F.size(F.col(VIOLATIONS_COL)) > 0,
-                  F.lit("ValidationError"))
-            .otherwise(F.lit("Valid")),
-        )
-        .withColumn(
-            DECODING_ERROR_COL,
-            F.try_element_at(F.col(STRUCTURAL_COL), F.lit(1))["error"],
-        )
-        .drop("_malformed", "_null_errs", "_mismatch_errs")
-    )
+    ann = ann.withColumns(
+        _verdict_and_error(F.col(STRUCTURAL_COL), F.col(VIOLATIONS_COL))
+    ).drop("_malformed", "_decode_errs")
     return ValidationResult(annotated=ann, schema=schema)

@@ -84,6 +84,11 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     (joins, aggregations, per-row projections) is unchanged; do not use
     it where partition ORDER feeds results (collect_list outputs,
     float cross-row sum tie-breaking) without checking the consumer.
+
+    Contract: call it directly on a scan (or on narrow projections of
+    one). The probe is ``df.rdd.getNumPartitions()``, which is free on
+    a scan; on a plan with an exchange under AQE it runs that
+    exchange's stages while the query is still being built.
     """
     sc = df.sparkSession.sparkContext
     want = sc.defaultParallelism

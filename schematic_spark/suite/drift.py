@@ -216,6 +216,38 @@ class DriftReport:
     detail: dict
 
 
+def _ks_report(h1: dict, h2: dict, alpha: float) -> DriftReport:
+    """KS report from the current and baseline bucket→count maps."""
+    d, p = ks_from_histograms(h1, h2)
+    return DriftReport(
+        kind="ks", statistic=d, p_value=p, drifted=p < alpha,
+        detail={"n_current": sum(h1.values()),
+                "n_baseline": sum(h2.values())},
+    )
+
+
+def _chi2_report(obs: dict, base: dict, alpha: float) -> DriftReport:
+    """Chi-square report from the current and baseline
+    category→count maps."""
+    stat, dof, p = chi_square_from_counts(obs, base)
+    return DriftReport(
+        kind="chi2", statistic=stat, p_value=p, drifted=p < alpha,
+        detail={"dof": dof, "n_categories": len(set(obs) | set(base))},
+    )
+
+
+def _psi_report(cur: dict, base: dict, threshold: float) -> DriftReport:
+    """PSI report from the current and baseline category→count maps;
+    PSI has no p-value (NaN), ``drifted`` is the threshold test."""
+    stat = psi_from_counts(cur, base)
+    return DriftReport(
+        kind="psi", statistic=stat, p_value=float("nan"),
+        drifted=stat >= threshold,
+        detail={"n_categories": len(set(cur) | set(base)),
+                "threshold": threshold},
+    )
+
+
 def ks_drift(
     current: DataFrame,
     baseline: DataFrame,
@@ -240,11 +272,7 @@ def ks_drift(
             baseline, column, lo=lo, hi=hi, n_buckets=n_buckets
         ).collect()
     }
-    d, p = ks_from_histograms(h1, h2)
-    return DriftReport(
-        kind="ks", statistic=d, p_value=p, drifted=p < alpha,
-        detail={"n_current": sum(h1.values()), "n_baseline": sum(h2.values())},
-    )
+    return _ks_report(h1, h2, alpha)
 
 
 def _split_counts(df, key_expr, is_current, key_name: str):
@@ -293,12 +321,7 @@ def ks_drift_split(
         is_current,
         "bucket",
     )
-    d, p = ks_from_histograms(h1, h2)
-    return DriftReport(
-        kind="ks", statistic=d, p_value=p, drifted=p < alpha,
-        detail={"n_current": sum(h1.values()),
-                "n_baseline": sum(h2.values())},
-    )
+    return _ks_report(h1, h2, alpha)
 
 
 def chi2_drift_split(
@@ -313,11 +336,7 @@ def chi2_drift_split(
     obs, base = _split_counts(
         df, _category_expr(column), is_current, "category"
     )
-    stat, dof, p = chi_square_from_counts(obs, base)
-    return DriftReport(
-        kind="chi2", statistic=stat, p_value=p, drifted=p < alpha,
-        detail={"dof": dof, "n_categories": len(set(obs) | set(base))},
-    )
+    return _chi2_report(obs, base, alpha)
 
 
 def chi2_drift(
@@ -334,11 +353,7 @@ def chi2_drift(
     base = {
         r["category"]: r["n"] for r in category_counts(baseline, column).collect()
     }
-    stat, dof, p = chi_square_from_counts(obs, base)
-    return DriftReport(
-        kind="chi2", statistic=stat, p_value=p, drifted=p < alpha,
-        detail={"dof": dof, "n_categories": len(set(obs) | set(base))},
-    )
+    return _chi2_report(obs, base, alpha)
 
 
 def psi_from_counts(
@@ -384,13 +399,7 @@ def psi_drift(
         r["category"]: r["n"]
         for r in category_counts(baseline, column).collect()
     }
-    stat = psi_from_counts(cur, base)
-    return DriftReport(
-        kind="psi", statistic=stat, p_value=float("nan"),
-        drifted=stat >= threshold,
-        detail={"n_categories": len(set(cur) | set(base)),
-                "threshold": threshold},
-    )
+    return _psi_report(cur, base, threshold)
 
 
 def psi_drift_split(
@@ -406,10 +415,4 @@ def psi_drift_split(
     cur, base = _split_counts(
         df, _category_expr(column), is_current, "category"
     )
-    stat = psi_from_counts(cur, base)
-    return DriftReport(
-        kind="psi", statistic=stat, p_value=float("nan"),
-        drifted=stat >= threshold,
-        detail={"n_categories": len(set(cur) | set(base)),
-                "threshold": threshold},
-    )
+    return _psi_report(cur, base, threshold)

@@ -28,8 +28,8 @@ JIT fixed cost (~1-2 s per distinct stage on this box) shrinks with it.
 
 Semantics are pinned to the classic phases by construction — the agg
 expressions are imported from the same modules (`column_stat_aggs`,
-`non_monotonic_flag`, `_bucket_expr`, `chi_square_from_counts`,
-`ks_from_histograms`) — and by `tests/test_fused_suite.py`, which
+`non_monotonic_flag`, `_bucket_expr`, and the `_ks_report`/`_chi2_report`
+builders) — and by `tests/test_fused_suite.py`, which
 asserts result equality check-by-check on a generated table.
 
 Category caveat: chi-square categories must be declared up front
@@ -49,12 +49,7 @@ from pyspark.sql import functions as F
 
 from ..generator import non_monotonic_flag
 from ..validation import VERDICT_COL, VIOLATIONS_COL, validate
-from .drift import (
-    DriftReport,
-    _bucket_expr,
-    chi_square_from_counts,
-    ks_from_histograms,
-)
+from .drift import DriftReport, _bucket_expr, _chi2_report, _ks_report
 from .referential import dangling_rows
 from .stats import column_stat_aggs, column_stats_from_flat
 from .uniqueness import duplicate_keys_salted
@@ -264,22 +259,8 @@ def run_fused_suite(
         base_hist, base_kinds = f3.result()
 
     # -- driver-side statistics (same code paths as the classic suite) ---
-    d, p = ks_from_histograms(cur_hist, base_hist)
-    ks = DriftReport(
-        kind="ks", statistic=d, p_value=p, drifted=p < alpha,
-        detail={
-            "n_current": sum(cur_hist.values()),
-            "n_baseline": sum(base_hist.values()),
-        },
-    )
-    stat, dof, cp = chi_square_from_counts(cur_kinds, base_kinds)
-    chi2 = DriftReport(
-        kind="chi2", statistic=stat, p_value=cp, drifted=cp < alpha,
-        detail={
-            "dof": dof,
-            "n_categories": len(set(cur_kinds) | set(base_kinds)),
-        },
-    )
+    ks = _ks_report(cur_hist, base_hist, alpha)
+    chi2 = _chi2_report(cur_kinds, base_kinds, alpha)
     verdicts = {
         v: m1[f"__verdict_{v}"] or 0
         for v in _VERDICTS

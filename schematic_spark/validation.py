@@ -156,15 +156,48 @@ def exploded_error_rows(
     )
 
 
+def _preflight(schema: Schema) -> None:
+    """The spec checks every validation entry runs while the query is
+    built, before anything is compiled: a top-level object (TopLevel
+    restriction, Schema.hs:592-595), satisfiable constraints
+    (:class:`~schematic_spark.schema.verifier.UnsatisfiableSchema`
+    otherwise) and regexes that compile (``ValueError`` otherwise, not
+    a failed task mid-job)."""
+    if not isinstance(schema, SObject):
+        raise TypeError(
+            "top-level spec must be an object (table row) — "
+            "TopLevel restriction, Schema.hs:592-595"
+        )
+    verify_schema(schema)
+    compile_regex_preflight(schema)
+
+
+def _verdict_and_error(structural: Column, violations: Column) -> dict:
+    """``_verdict`` and ``_decoding_error`` from the two error arrays:
+    the 3-way verdict (Validation.hs:30-34) and the first structural
+    message (the reference's single-Text DecodingError payload)."""
+    return {
+        VERDICT_COL: (
+            F.when(F.size(structural) > 0, F.lit("DecodingError"))
+            .when(F.size(violations) > 0, F.lit("ValidationError"))
+            .otherwise(F.lit("Valid"))
+        ),
+        # try_element_at: null (not ANSI error) on empty structural array
+        DECODING_ERROR_COL: F.try_element_at(structural, F.lit(1))["error"],
+    }
+
+
 def compile_verdict_columns(
     schema: SObject, row: Column | None = None
 ) -> dict[str, Column]:
-    """The whole validation walk as four Columns over a row struct.
-    Exposed separately so callers can embed validation into larger
-    plans (e.g. streaming, migration dispatch, versioned raw-JSON
-    parse) without re-validating. ``row`` defaults to a struct of the
-    frame's top-level columns; pass any struct column (e.g. a
-    ``from_json`` result) to validate nested documents."""
+    """The whole validation walk as four Columns over a row struct,
+    after the same :func:`_preflight` as :func:`validate`. Exposed
+    separately so callers can embed validation into larger plans (the
+    versioned dispatch and the versioned raw-JSON parse) without
+    re-validating. ``row`` defaults to a struct of the frame's
+    top-level columns; pass any struct column (e.g. a ``from_json``
+    result) to validate nested documents."""
+    _preflight(schema)
     if row is None:
         row = F.struct(
             *[F.col(name).alias(name) for name in schema.field_names()]
@@ -179,18 +212,10 @@ def compile_verdict_columns(
     # NOT dedupe across HOF lambdas (CLAUDE.md). Callers needing more
     # than the verdict should materialize the array columns first and
     # derive the rest from the columns, as validate() does.
-    verdict = (
-        F.when(F.size(structural) > 0, F.lit("DecodingError"))
-        .when(F.size(violations) > 0, F.lit("ValidationError"))
-        .otherwise(F.lit("Valid"))
-    )
-    # try_element_at: null (not ANSI error) on empty structural array
-    decoding_error = F.try_element_at(structural, F.lit(1))["error"]
     return {
         STRUCTURAL_COL: structural,
         VIOLATIONS_COL: violations,
-        VERDICT_COL: verdict,
-        DECODING_ERROR_COL: decoding_error,
+        **_verdict_and_error(structural, violations),
     }
 
 
@@ -204,13 +229,7 @@ def validate(df: DataFrame, spec: Schema | dict | str) -> ValidationResult:
     (the analog of schematic's type error).
     """
     schema = as_schema(spec)
-    if not isinstance(schema, SObject):
-        raise TypeError(
-            "top-level spec must be an object (table row) — "
-            "TopLevel restriction, Schema.hs:592-595"
-        )
-    verify_schema(schema)
-    compile_regex_preflight(schema)
+    _preflight(schema)
     present = set(df.columns)
     for name, fschema in schema.fields:
         if name not in present and isinstance(fschema, (SOptional, SNull)):
@@ -258,17 +277,7 @@ def validate(df: DataFrame, spec: Schema | dict | str) -> ValidationResult:
         )
         .drop("_row_ok")
     )
-    annotated = (
-        annotated
-        .withColumn(
-            VERDICT_COL,
-            F.when(F.size(F.col(STRUCTURAL_COL)) > 0, F.lit("DecodingError"))
-            .when(F.size(F.col(VIOLATIONS_COL)) > 0, F.lit("ValidationError"))
-            .otherwise(F.lit("Valid")),
-        )
-        .withColumn(
-            DECODING_ERROR_COL,
-            F.try_element_at(F.col(STRUCTURAL_COL), F.lit(1))["error"],
-        )
+    annotated = annotated.withColumns(
+        _verdict_and_error(F.col(STRUCTURAL_COL), F.col(VIOLATIONS_COL))
     )
     return ValidationResult(annotated=annotated, schema=schema)

@@ -1,4 +1,4 @@
-"""Differential property test for the RAW-JSON entry point: for random
+"""Differential property test for the RAW-JSON entry points: for random
 schemas and randomly corrupted JSON documents, ``validate_json_strings``
 must agree with the pure interpreter fed the json-parsed value —
 
@@ -7,6 +7,11 @@ must agree with the pure interpreter fed the json-parsed value —
   * for DecodingError rows: the interpreter's fail-fast first message
     must appear in the engine's (superset) structural list,
   * syntactically malformed strings → exactly ``"malformed json"``.
+
+``validate_versioned_json_strings`` with a one-revision spec runs over
+the same documents and must give every row the interpreter's verdict
+too (upgraded = Valid, rejected = its ``_verdict``), which pins the two
+raw-JSON entry points to each other.
 
 Corruption modes fuzzed: missing required keys (any depth), explicit
 nulls under SOptional, constraint-violating values of the CORRECT kind,
@@ -24,6 +29,10 @@ import random
 
 import pytest
 
+from schematic_spark.migrations import (
+    VersionedSpec,
+    validate_versioned_json_strings,
+)
 from schematic_spark.schema.ast import Schema, SNull, SObject, SOptional
 from schematic_spark.schema.interpret import parse_and_validate
 from schematic_spark.sources.json_ingest import validate_json_strings
@@ -88,6 +97,20 @@ def _absent_instead_of_null(value, schema: Schema):
     return value
 
 
+def _versioned_verdicts(df, schema) -> dict:
+    """row_id → verdict from ``validate_versioned_json_strings`` with a
+    one-revision spec: an upgraded row is Valid, a rejected row carries
+    its ``_verdict``."""
+    upgraded, rejected = validate_versioned_json_strings(
+        df, "raw", VersionedSpec(base=schema)
+    )
+    got = [(r["row_id"], "Valid") for r in upgraded.collect()] + [
+        (r["row_id"], r["_verdict"]) for r in rejected.collect()
+    ]
+    assert len(got) == df.count()
+    return dict(got)
+
+
 @pytest.mark.parametrize("seed", [5, 17, 41])
 def test_raw_json_matches_interpreter(spark, seed):
     from schematic_spark.schema.verifier import (
@@ -149,6 +172,11 @@ def test_raw_json_matches_interpreter(spark, seed):
             assert expect.decoding_error in msgs, (
                 i, raw, expect.decoding_error, msgs,
             )
+
+    versioned = _versioned_verdicts(df, schema)
+    for i, raw in rows:
+        expect = "DecodingError" if expects[i] is None else expects[i].verdict
+        assert versioned[i] == expect, (i, raw, versioned[i], expect)
 
 
 @pytest.mark.parametrize("seed", [3, 29])
@@ -287,3 +315,9 @@ def test_raw_json_union_encodings_match_interpreter(spark, seed):
             assert expect.decoding_error in msgs, (
                 i, raw, expect.decoding_error, msgs,
             )
+
+    versioned = _versioned_verdicts(df, schema)
+    for i, raw in rows:
+        assert versioned[i] == expects[i].verdict, (
+            i, raw, versioned[i], expects[i].verdict,
+        )

@@ -28,6 +28,10 @@ from schematic_spark.schema import (
     SOptional,
     SText,
     TEnum,
+    TGe,
+    TLe,
+    TRegex,
+    UnsatisfiableSchema,
 )
 from schematic_spark.sources import (
     ParquetDirFormat,
@@ -472,6 +476,43 @@ class TestVersionedJsonRound3:
         assert sorted(r["k"] for r in upgraded.collect()) == ["n", "t"]
         rej = {r["k"]: r["_verdict"] for r in rejected.collect()}
         assert rej == {"none": "DecodingError"}
+
+
+class TestVersionedPreflight:
+    """Both versioned entry points run validate()'s preflight on every
+    revision while the query is built: a bad spec raises there, before
+    any Spark job, instead of rejecting every row or failing a task."""
+
+    @pytest.mark.parametrize("bad, error", [
+        (SText((TGe(5), TLe(1))), UnsatisfiableSchema),
+        (SText((TRegex("([a-z"),)), ValueError),
+    ])
+    def test_bad_revision_raises_when_query_is_built(self, spark, bad, error):
+        from schematic_spark.migrations import validate_versioned_json_strings
+
+        spec = VersionedSpec(
+            base=SObject((("foo", SText()),)),
+            migrations=[Migration(
+                "add_bad", (Diff((), AddKey("bad", bad)),)
+            )],
+            upgrades={"add_bad": add_column_upgrade("bad", "xyz")},
+        )
+        typed = spark.createDataFrame([("a", "xyz")], "foo string, bad string")
+        raw = spark.createDataFrame(
+            [('{"foo":"a","bad":"xyz"}',)], "raw string"
+        )
+        sc = spark.sparkContext
+        group = "versioned-preflight"
+        sc.setJobGroup(group, "versioned preflight")
+        try:
+            with pytest.raises(error):
+                validate_versioned(typed, spec)
+            with pytest.raises(error):
+                validate_versioned_json_strings(raw, "raw", spec)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
 class TestCheckpointWaves:
