@@ -381,10 +381,9 @@ def _q_versioned_dispatch_documents(spark, sf_dir):
     )
     docs = _read(spark, sf_dir, "documents")
     upgraded, rejected = validate_versioned(docs, spec, persist=False)
-    n_rej = rejected.count()
     return (
         upgraded.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("n_rejected", F.lit(n_rej))
+        .crossJoin(rejected.agg(F.count(F.lit(1)).alias("n_rejected")))
     )
 
 

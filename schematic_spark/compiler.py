@@ -13,20 +13,16 @@ Cost model at 100 TB scale:
     guards, so string concatenation only materializes for *violating*
     elements — the happy path evaluates predicates only;
   * only the columns the spec mentions are referenced, so Catalyst
-    prunes the parquet/Iceberg scan to exactly those columns;
-  * TDFA-only regex dialects (the one thing Java regex can't run) fall
-    back to a vectorized Arrow-batched pandas UDF that runs the pure
-    interpreter over the affected subtree — never row-at-a-time Python.
+    prunes the parquet/Iceberg scan to exactly those columns.
 """
 
 from __future__ import annotations
 
 import operator
 import re
-from typing import Any
 
-import pandas as pd
-from pyspark.sql import Column
+from pyspark.errors import IllegalArgumentException
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -71,8 +67,8 @@ from .schema.ast import (
     TLt,
     TRegex,
     missing_field_message,
+    translate_posix_classes,
 )
-from .schema.interpret import validate_parsed
 
 VIOLATION_DDL = "array<struct<path:string,error:string>>"
 
@@ -102,91 +98,6 @@ def _concat_all(arrays: list[Column]) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Regex dialect routing
-# ---------------------------------------------------------------------------
-
-_POSIX_CLASS = re.compile(r"\[\[:\w+:\]\]|\[\[:\^?\w+:\]\]")
-
-
-def regex_needs_python(c: TRegex) -> bool:
-    """True when the pattern must run through Python ``re`` instead of
-    JVM ``rlike``. POSIX character classes (``[[:alpha:]]``) are the
-    TDFA/ERE syntax Java regex lacks (SURVEY §2.1 T6)."""
-    if c.dialect == "python":
-        return True
-    if c.dialect == "java":
-        return False
-    return bool(_POSIX_CLASS.search(c.pattern))
-
-
-def subtree_needs_python(schema: Schema) -> bool:
-    if isinstance(schema, SText):
-        return any(
-            isinstance(c, TRegex) and regex_needs_python(c)
-            for c in schema.constraints
-        )
-    if isinstance(schema, SArray):
-        return subtree_needs_python(schema.item)
-    if isinstance(schema, SObject):
-        return any(subtree_needs_python(s) for _, s in schema.fields)
-    if isinstance(schema, SOptional):
-        return subtree_needs_python(schema.inner)
-    if isinstance(schema, SUnion):
-        if not schema.validate_branches:
-            return False  # union validation is a no-op (Validation.hs:244)
-        return any(subtree_needs_python(a) for a in schema.alternatives)
-    return False
-
-
-def _normalize_py(v: Any) -> Any:
-    """Arrow→pandas materialization → plain Python (dicts/lists/scalars)."""
-    import numpy as np
-
-    if v is None:
-        return None
-    if isinstance(v, np.ndarray):
-        return [_normalize_py(x) for x in v.tolist()]
-    if isinstance(v, (list, tuple)):
-        return [_normalize_py(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _normalize_py(x) for k, x in v.items()}
-    if isinstance(v, np.generic):
-        return v.item()
-    if v is getattr(__import__("pandas"), "NA", object()):
-        return None
-    return v
-
-
-def _interpreted_violations(schema: Schema, value: Column, path: Column) -> Column:
-    """Vectorized fallback: run the pure interpreter over an Arrow batch.
-
-    Used only for subtrees containing Python-dialect regexes; Arrow
-    transfers the whole subtree as one batch (no per-row Python calls
-    across the JVM boundary — BASELINE.json:15).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    captured = schema  # closure over the (picklable) dataclass AST
-
-    @pandas_udf(VIOLATION_DDL)
-    def _run(values: pd.Series, paths: pd.Series) -> pd.Series:
-        out = []
-        for v, p in zip(values, paths):
-            if v is None:
-                out.append([])
-                continue
-            viols: list[tuple[str, str]] = []
-            validate_parsed(captured, _normalize_py(v), (), viols)
-            prefix = p or ""
-            out.append([
-                {"path": prefix + vp, "error": msg} for vp, msg in viols
-            ])
-        return pd.Series(out)
-
-    return _run(value, path)
-
-
-# ---------------------------------------------------------------------------
 # Constraint predicates (the §2.1 operator table)
 # ---------------------------------------------------------------------------
 
@@ -207,7 +118,8 @@ def constraint_predicate(c: Constraint, value: Column) -> Column:
     disagree about a row (a mask that passes a violating row reports it
     Valid)."""
     if isinstance(c, TRegex):
-        return value.rlike(c.pattern)  # unanchored search = matchTest
+        # unanchored search = matchTest
+        return value.rlike(translate_posix_classes(c.pattern))
     if isinstance(c, TEnum):
         return value.isin(*c.values) if c.values else F.lit(False)
     compare = _COMPARE.get(type(c))
@@ -237,33 +149,6 @@ def compile_violations(schema: Schema, value: Column, path: Column) -> Column:
     """array<struct<path,error>> of all constraint violations in the
     subtree rooted at ``value``. Never null. Accumulates everything
     (monoidal ErrorMap semantics — Validation.hs:26-28)."""
-    if subtree_needs_python(schema):
-        if isinstance(schema, SObject):
-            # route per field so one python-dialect regex doesn't drag
-            # sibling fields through the interpreter
-            parts = []
-            for name, fschema in schema.fields:
-                fpath = F.concat(path, F.lit("." + name))
-                parts.append(compile_violations(fschema, value[name], fpath))
-            body = _concat_all(parts)
-            return F.when(value.isNull(), _empty_violations()).otherwise(body)
-        if isinstance(schema, SUnion):
-            # per-branch routing: the interpreter fallback expects raw
-            # values, not the struct-of-branches column encoding
-            return _union_branch_cascade(
-                schema, value,
-                lambda alt, payload: compile_violations(alt, payload, path),
-            )
-        return F.coalesce(
-            _interpreted_violations(schema, value, path),
-            _empty_violations(),
-        )
-    return _compile_violations_native(schema, value, path)
-
-
-def _compile_violations_native(
-    schema: Schema, value: Column, path: Column
-) -> Column:
     if isinstance(schema, (SText, SNumber)):
         return _violation_cells(schema.constraints, value, path)
     if isinstance(schema, (SBoolean, SNull)):
@@ -271,7 +156,7 @@ def _compile_violations_native(
     if isinstance(schema, SOptional):
         # Nothing short-circuits valid — Validation.hs:231-234
         return F.when(value.isNull(), _empty_violations()).otherwise(
-            _compile_violations_native(schema.inner, value, path)
+            compile_violations(schema.inner, value, path)
         )
     if isinstance(schema, SArray):
         own = _violation_cells(schema.constraints, value, path)
@@ -282,9 +167,7 @@ def _compile_violations_native(
         parts = []
         for name, fschema in schema.fields:
             fpath = F.concat(path, F.lit("." + name))
-            parts.append(
-                _compile_violations_native(fschema, value[name], fpath)
-            )
+            parts.append(compile_violations(fschema, value[name], fpath))
         body = _concat_all(parts)
         return F.when(value.isNull(), _empty_violations()).otherwise(body)
     if isinstance(schema, SUnion):
@@ -296,8 +179,7 @@ def _compile_violations_native(
         # left-biased first matched branch
         return _union_branch_cascade(
             schema, value,
-            lambda alt, payload: _compile_violations_native(
-                alt, payload, path),
+            lambda alt, payload: compile_violations(alt, payload, path),
         )
     raise TypeError(f"unknown schema node {schema!r}")
 
@@ -325,7 +207,7 @@ def _elem_violations(item: Schema, arr: Column, path: Column) -> Column | None:
     return F.flatten(
         F.transform(
             arr,
-            lambda x, i: _compile_violations_native(
+            lambda x, i: compile_violations(
                 item,
                 x,
                 F.concat(path, F.lit("["), i.cast("string"), F.lit("]")),
@@ -734,10 +616,6 @@ def compile_valid_mask(schema: SObject, value: Column) -> Column:
 
 
 def _mask_node(schema: Schema, value: Column, *, required: bool) -> Column:
-    if subtree_needs_python(schema):
-        # python-dialect subtree: can't express as a JVM predicate; the
-        # caller falls back to computing the arrays for every row
-        return F.lit(False)
     if isinstance(schema, SOptional):
         inner = _mask_node(schema.inner, value, required=True)
         return value.isNull() | inner
@@ -825,14 +703,21 @@ def union_tag(value: Column, union: SUnion) -> Column:
 
 
 def compile_regex_preflight(schema: Schema) -> None:
-    """Reject regex patterns that compile in neither dialect — fail at
-    spec-compile time, not mid-job on an executor."""
+    """Reject, while the query is built, a regex that either engine
+    cannot compile — not mid-job on an executor. The pattern checked is
+    the one both engines run (:func:`translate_posix_classes`), compiled
+    by Python ``re`` (the interpreter) and by ``java.util.regex.Pattern``
+    (``rlike``) over the session's JVM gateway: a py4j call, no Spark
+    job."""
     if isinstance(schema, SText):
         for c in schema.constraints:
             if isinstance(c, TRegex):
                 try:
-                    re.compile(c.pattern)
-                except re.error as e:
+                    pattern = translate_posix_classes(c.pattern)
+                    re.compile(pattern)
+                    jvm = SparkSession.active()._jvm  # noqa: SLF001
+                    jvm.java.util.regex.Pattern.compile(pattern)
+                except (ValueError, re.error, IllegalArgumentException) as e:
                     raise ValueError(
                         f"invalid regex {c.pattern!r}: {e}"
                     ) from None

@@ -156,10 +156,6 @@ def all_versions(
     return list(reversed(acc))
 
 
-def top_version(base: Schema, migrations: list[Migration]) -> Schema:
-    return all_versions(base, migrations)[0][1]
-
-
 def infer_diffs(
     old: Schema, new: Schema, path: tuple[str, ...] = ()
 ) -> tuple[Diff, ...]:

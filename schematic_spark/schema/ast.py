@@ -23,7 +23,9 @@ Constraint kinds mirror ``Schema.hs:41-48`` (text), ``:121-127`` (number),
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 
 # ---------------------------------------------------------------------------
@@ -102,19 +104,67 @@ class TGe(TextConstraint):
 class TRegex(TextConstraint):
     """POSIX-ERE unanchored *search* (regex-tdfa matchTest) — Validation.hs:93-99.
 
-    ``dialect``:
-      * ``"auto"``   — use Spark ``rlike`` (Java regex) when the pattern is
-        in the Java-compatible subset, otherwise fall back to a vectorized
-        pandas UDF running Python ``re.search``;
-      * ``"java"``   — force ``rlike``;
-      * ``"python"`` — force the pandas-UDF path.
+    Both engines run the same string, :func:`translate_posix_classes`
+    of ``pattern``: Spark ``rlike`` (Java regex) in the compiler and
+    Python ``re.search`` in the interpreter. ``message()`` keeps the
+    pattern as written.
     """
 
     pattern: str
-    dialect: str = "auto"
 
     def message(self) -> str:
         return f"must match {self.pattern}"
+
+
+# C-locale ASCII members of each POSIX bracket class (plus ``word``), as
+# ``\xHH`` ranges that Java and Python regex read identically. regex-tdfa
+# expands a class to a fixed ASCII character list in
+# ``Text.Regex.TDFA.TNFA.decodeCharacterClass`` rather than consulting
+# ``Data.Char`` predicates (recalled from that function; the reference
+# source was not available to re-read when this table was written).
+_POSIX_CLASS_RANGES = {
+    "alnum": r"\x30-\x39\x41-\x5a\x61-\x7a",
+    "alpha": r"\x41-\x5a\x61-\x7a",
+    "blank": r"\x09\x20",
+    "cntrl": r"\x00-\x1f\x7f",
+    "digit": r"\x30-\x39",
+    "graph": r"\x21-\x7e",
+    "lower": r"\x61-\x7a",
+    "print": r"\x20-\x7e",
+    "punct": r"\x21-\x2f\x3a-\x40\x5b-\x60\x7b-\x7e",
+    "space": r"\x09-\x0d\x20",
+    "upper": r"\x41-\x5a",
+    "xdigit": r"\x30-\x39\x41-\x46\x61-\x66",
+    "word": r"\x30-\x39\x41-\x5a\x5f\x61-\x7a",
+}
+
+# a bracket expression (an optional ^ and a leading literal ], then
+# classes, escapes or plain members up to the closing ]), or an escape
+_BRACKET = re.compile(r"\\.|\[\^?\]?(?:\[:[^:\]]*:\]|\\.|[^\]])*\]", re.S)
+_MEMBER = re.compile(r"\[:([^:\]]*):\]|\\.", re.S)
+
+
+def _member_ranges(m: re.Match) -> str:
+    name = m.group(1)
+    if name is None:
+        return m.group()  # an escaped member stays as written
+    if name not in _POSIX_CLASS_RANGES:
+        raise ValueError(f"unknown POSIX class [:{name}:]")
+    return _POSIX_CLASS_RANGES[name]
+
+
+@lru_cache(maxsize=256)
+def translate_posix_classes(pattern: str) -> str:
+    """The pattern both regex engines run: every ``[:name:]`` inside a
+    bracket expression replaced by its ``\\xHH`` ranges, so
+    ``[[:alpha:]_-]`` and ``[^[:digit:]]`` keep their other members and
+    their negation. A pattern without a class comes back unchanged.
+    Raises ``ValueError`` on an unknown class name (the non-POSIX
+    ``[:^alpha:]`` included)."""
+    return _BRACKET.sub(
+        lambda m: m.group()[0] + _MEMBER.sub(_member_ranges, m.group()[1:]),
+        pattern,
+    )
 
 
 @dataclass(frozen=True)
@@ -419,11 +469,6 @@ _KIND_BY_TYPE: dict[type, str] = {
     SOptional: "optional",
     SUnion: "union",
 }
-
-
-def top_level_ok(schema: Schema) -> bool:
-    """Root must be object or array — TopLevel, Schema.hs:592-595."""
-    return isinstance(schema, (SObject, SArray))
 
 
 def missing_field_message(name: str, schema: Schema) -> str:

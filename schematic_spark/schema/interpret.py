@@ -2,11 +2,9 @@
 structural parse (``Schema.hs:525-567``) + constraint walk
 (``Validation.hs:193-244``).
 
-Three uses in the engine:
+Two uses in the engine:
   1. the *oracle* for property tests (Spark compiler output must agree),
-  2. the vectorized pandas-UDF fallback for subtrees whose constraints
-     cannot run JVM-side (e.g. TDFA-only regex dialects),
-  3. validation of in-flight Python values (spec tooling, generators).
+  2. validation of in-flight Python values (spec tooling, generators).
 
 This is NOT the hot path — the hot path is the Catalyst compiler in
 ``schematic_spark/compiler.py``.
@@ -48,6 +46,7 @@ from .ast import (
     TRegex,
     missing_field_message,
     render_path,
+    translate_posix_classes,
 )
 
 VERDICT_VALID = "Valid"
@@ -230,7 +229,8 @@ def _check_text(value: str, constraints, path: str, out: list) -> None:
             ok = _text_len(value) >= c.n
         elif isinstance(c, TRegex):
             # unanchored search — matchTest semantics (Validation.hs:96)
-            ok = re.search(c.pattern, value) is not None
+            pattern = translate_posix_classes(c.pattern)
+            ok = re.search(pattern, value) is not None
         elif isinstance(c, TEnum):
             ok = value in c.values
         else:

@@ -61,7 +61,7 @@ def _parse_constraint(d: dict) -> Any:
     if op in _N_OPS:
         return _N_OPS[op](int(d["n"]))
     if op == "TRegex":
-        return TRegex(d["pattern"], d.get("dialect", "auto"))
+        return TRegex(d["pattern"])
     if op == "TEnum":
         return TEnum(tuple(d["values"]))
     raise ValueError(f"unknown constraint op: {op!r}")
@@ -105,10 +105,7 @@ def parse_spec(spec: dict | str) -> Schema:
 def _dump_constraint(c: Any) -> dict:
     name = type(c).__name__
     if isinstance(c, TRegex):
-        out: dict = {"op": "TRegex", "pattern": c.pattern}
-        if c.dialect != "auto":
-            out["dialect"] = c.dialect
-        return out
+        return {"op": "TRegex", "pattern": c.pattern}
     if isinstance(c, TEnum):
         return {"op": "TEnum", "values": list(c.values)}
     return {"op": name, "n": c.n}

@@ -36,6 +36,7 @@ from .ast import (
     SUnion,
     TEnum,
     TRegex,
+    translate_posix_classes,
 )
 from .verifier import (
     verify_array_constraints,
@@ -56,7 +57,7 @@ _MAX_REPEAT_SAMPLE = 10
 def sample_regex(pattern: str, rng: random.Random) -> str:
     """A string matching ``pattern`` (full-match, which also satisfies
     the engine's unanchored search)."""
-    tree = sre_parse.parse(pattern)
+    tree = sre_parse.parse(translate_posix_classes(pattern))
     return "".join(_sample_seq(tree, rng))
 
 

@@ -56,6 +56,7 @@ from .ast import (
     TLe,
     TLt,
     TRegex,
+    translate_posix_classes,
 )
 
 
@@ -151,8 +152,8 @@ def regex_length_bounds(pattern: str) -> tuple[int, int | None] | None:
     (Verifier/Text.hs:44-86) over Python's ``sre_parse`` tree.
     """
     try:
-        tree = sre_parse.parse(pattern)
-    except re.error:
+        tree = sre_parse.parse(translate_posix_classes(pattern))
+    except (re.error, ValueError):
         return None
     lo, hi = _seq_bounds(tree)
     return lo, (None if hi is _UNBOUNDED else hi)

@@ -18,12 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..validation import (
-    VERDICT_COL,
-    VIOLATIONS_COL,
-    exploded_error_rows,
-    validate,
-)
+from ..validation import VERDICT_COL, VIOLATIONS_COL, validate
 
 
 def validate_stream(df: DataFrame, spec) -> DataFrame:
@@ -39,13 +34,6 @@ def validate_stream(df: DataFrame, spec) -> DataFrame:
     silently skipped all of those — the exact single-predicate rule
     CLAUDE.md records for the mask/compiler split."""
     return validate(df, spec).annotated
-
-
-def streaming_violations(df: DataFrame, *id_cols: str) -> DataFrame:
-    """Exploded violation rows from an annotated stream — the shared
-    pushdown-trap-safe pattern (one copy for batch and streaming,
-    see :func:`~schematic_spark.validation.exploded_error_rows`)."""
-    return exploded_error_rows(df, VIOLATIONS_COL, *id_cols)
 
 
 def windowed_verdict_counts(
@@ -89,37 +77,19 @@ def dedup_stream(
 
 
 def running_verdict_totals(annotated: DataFrame, key_col: str) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): cumulative
-    (n_rows, n_bad) per key across the whole stream, re-emitted whenever
-    a batch touches the key. State is two longs per key.
-
-    The engine analog of keeping a running ErrorMap per partition key —
-    something the stateless verdict projection can't express."""
-    import pandas as pd  # noqa: F811 — module scope needed by pandas_udf paths
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdfs, state: GroupState):
-        n_rows, n_bad = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n_rows += len(pdf)
-            n_bad += int((pdf["verdict"] != "Valid").sum())
-        state.update((n_rows, n_bad))
-        yield pd.DataFrame(
-            {"key": [key[0]], "n_rows": [n_rows], "n_bad": [n_bad]}
-        )
-
+    """Cumulative ``(key, n_rows, n_bad)`` per key across the whole
+    stream: a streaming aggregation whose state store keeps the two
+    counts per key. In ``update`` output mode it re-emits a key's
+    totals whenever a batch touches the key — the engine analog of a
+    running ErrorMap per partition key, which the stateless verdict
+    projection can't express."""
     return (
-        annotated.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.col(VERDICT_COL).alias("verdict"),
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            outputStructType="key string, n_rows long, n_bad long",
-            stateStructType="n_rows long, n_bad long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        annotated
+        .groupBy(F.col(key_col).cast("string").alias("key"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum((F.col(VERDICT_COL) != "Valid").cast("long"))
+            .alias("n_bad"),
         )
     )
 

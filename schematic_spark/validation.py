@@ -94,8 +94,9 @@ class ValidationResult:
         validation per row a second time. The isNotNull filter sits on
         the Generate's OUTPUT and cannot be pushed below it, so the
         violations array is computed exactly once per row. The pattern
-        lives in :func:`exploded_error_rows`, shared with the streaming
-        path so the two cannot drift."""
+        lives in :func:`exploded_error_rows`, which also takes the
+        annotated frame of
+        :func:`~schematic_spark.streaming.validate_stream`."""
         return exploded_error_rows(self.annotated, VIOLATIONS_COL,
                                    *id_cols)
 
@@ -136,7 +137,7 @@ def exploded_error_rows(
     annotated: DataFrame, array_col: str, *id_cols: str
 ) -> DataFrame:
     """``(…id_cols, json_path, error)`` rows from one (path, error)
-    array column of an annotated frame — batch AND streaming share this
+    array column of an annotated frame, batch or streaming — the
     single copy of the pushdown-trap-safe pattern: explode_OUTER + a
     post-Generate null filter, never a ``size(...) > 0`` pre-filter
     (predicate pushdown would re-inline the whole compiled tree into

@@ -4,23 +4,29 @@ Builds each `__spark_entry__.queries()` DataFrame at sf0.001 (plans,
 no execution — except queries that execute eagerly by design) and
 counts the plan operators that encode the engine's scale claims:
 
-- `BatchEvalPython`  — row-at-a-time Python (must be ZERO everywhere)
-- `ArrowEvalPython`  — vectorized pandas UDFs (media codecs only: a
-  query whose name does not start with `media_` must have none)
+- Python exec nodes (`BatchEvalPython`, `ArrowEvalPython`,
+  `MapInPandas`, `FlatMapGroupsInPandas*`, `PythonMapInArrow`) — one
+  rule for all of them: only the media codecs run Python, so a query
+  whose name does not start with `media_` must have none
 - `Exchange`         — shuffles
 - nested-loop / cartesian joins (only 1-row scalar attachments allowed)
 - `WholeStageCodegen` spans (JVM-side execution)
 
 Usage: python scripts/plan_audit.py [sf_dir] > BENCH/plan_audit_rN.md
 
-Exits 1 when any plan has a `BatchEvalPython`, a non-media query has an
-`ArrowEvalPython`, or a plan fails to build.
+Exits 1 when a non-media query has a Python exec node, or a plan fails
+to build.
 """
 
 from __future__ import annotations
 
 import re
 import sys
+
+PYTHON_NODE = re.compile(
+    r"(?:BatchEvalPython|ArrowEvalPython|MapInPandas"
+    r"|FlatMapGroupsInPandas\w*|PythonMapInArrow)\b.*"
+)
 
 
 def _listed(names: list[str]) -> str:
@@ -62,11 +68,9 @@ def main() -> int:
             plan,
         ))
         counts = {
-            "batch_py": len(re.findall(r"BatchEvalPython", plan)),
-            # ArrowEvalPython prints no plan_id — dedupe on the UDF
-            # expression list (reuse sites repeat it verbatim)
-            "arrow_py": len(set(re.findall(
-                r"ArrowEvalPython (\[[^]]*\])", plan))),
+            # Python nodes print no plan_id — dedupe on the node's line
+            # (reuse sites repeat it verbatim)
+            "python": len(set(PYTHON_NODE.findall(plan))),
             "exchange": len(ex_ids),
             "bnlj": len(set(re.findall(
                 r"BroadcastNestedLoopJoin.*?\[plan_id=(\d+)\]", plan))
@@ -76,18 +80,16 @@ def main() -> int:
         }
         rows.append((name, counts, None))
 
-    bad_py = [n for n, c, _ in rows if c and c["batch_py"]]
-    bad_arrow = [n for n, c, _ in rows
-                 if c and c["arrow_py"] and not n.startswith("media_")]
+    bad_py = [n for n, c, _ in rows
+              if c and c["python"] and not n.startswith("media_")]
     failed = [(n, e) for n, c, e in rows if c is None]
     print("# Plan audit — all entry queries (executed plans, "
           f"{sf_dir})\n")
     print(f"Queries audited: {len(rows)}; "
-          f"BatchEvalPython anywhere: {_listed(bad_py)}; "
-          f"ArrowEvalPython outside media_ queries: {_listed(bad_arrow)}")
+          f"Python exec nodes outside media_ queries: {_listed(bad_py)}")
     if failed:
         print(f"\nPlan build failures: {failed}")
-    print("\n| query | exchanges | arrow_py | bnlj | cartesian |"
+    print("\n| query | exchanges | python | bnlj | cartesian |"
           " codegen spans |")
     print("|---|---|---|---|---|---|")
     for name, c, _ in sorted(
@@ -95,9 +97,9 @@ def main() -> int:
     ):
         if c is None:
             continue
-        print(f"| {name} | {c['exchange']} | {c['arrow_py']} |"
+        print(f"| {name} | {c['exchange']} | {c['python']} |"
               f" {c['bnlj']} | {c['cartesian']} | {c['codegen']} |")
-    return 1 if bad_py or bad_arrow or failed else 0
+    return 1 if bad_py or failed else 0
 
 
 if __name__ == "__main__":

@@ -4,6 +4,7 @@ Spark-vs-interpreter property agreement."""
 from __future__ import annotations
 
 import random
+import string
 
 import pytest
 from pyspark.sql import functions as F
@@ -222,15 +223,8 @@ class TestF4RegexVectors:
         )
 
     def test_python_dialect_path(self, spark):
-        # POSIX class forces the pandas-UDF fallback
-        schema = SObject((
-            ("v", SText((TRegex("^[[:alnum:]]+$", dialect="python"),)),),
-        ))
-        # python re doesn't know [[:alnum:]] either — use a dialect=python
-        # pattern valid in python but not java: inline flag placement
-        schema = SObject((
-            ("v", SText((TRegex("(?i)hello", dialect="python"),)),),
-        ))
+        # an inline flag group, read the same way by Java and Python
+        schema = SObject((("v", SText((TRegex("(?i)hello"),)),),))
         df = spark.createDataFrame([("HELLO",), ("nope",)], "v string")
         res = validate(df, schema)
         verdicts = [r["_verdict"] for r in res.annotated.collect()]
@@ -314,6 +308,77 @@ class TestUnicodeLength:
             r["_verdict"] for r in validate(df, schema).annotated.collect()
         ]
         assert verdicts == ["Valid", "ValidationError", "Valid"]
+
+
+# The C-locale ASCII set of each POSIX bracket class, written from the
+# ``string`` module rather than from the translator's own table.
+_PUNCT = set(string.punctuation)
+POSIX_CLASS_SETS = {
+    "alnum": set(string.ascii_letters + string.digits),
+    "alpha": set(string.ascii_letters),
+    "blank": set(" \t"),
+    "cntrl": {chr(c) for c in range(32)} | {"\x7f"},
+    "digit": set(string.digits),
+    "graph": set(string.ascii_letters + string.digits) | _PUNCT,
+    "lower": set(string.ascii_lowercase),
+    "print": set(string.ascii_letters + string.digits + " ") | _PUNCT,
+    "punct": _PUNCT,
+    "space": set(string.whitespace),
+    "upper": set(string.ascii_uppercase),
+    "xdigit": set(string.hexdigits),
+    "word": set(string.ascii_letters + string.digits + "_"),
+}
+# every code point of 0x00-0x2FF, then Greek, Cyrillic, an Arabic-Indic
+# digit, LINE SEPARATOR, IDEOGRAPHIC SPACE and two astral characters
+SWEEP_CHARS = [chr(c) for c in range(0x300)] + [
+    "\u03b1", "\u0416", "\u0661", "\u2028", "\u3000",
+    "\U0001f600", "\U00010400",
+]
+
+
+class TestPosixClassSweep:
+    """Each POSIX bracket class, alone and composed, means the same
+    character set in Spark and in the interpreter, and that set is the
+    C-locale ASCII one (regex-tdfa expands classes to fixed ASCII lists)."""
+
+    COLUMNS = {
+        **{name: (f"^[[:{name}:]]$", members)
+           for name, members in POSIX_CLASS_SETS.items()},
+        "alpha_us_dash": ("^[[:alpha:]_-]$",
+                          POSIX_CLASS_SETS["alpha"] | set("_-")),
+        "not_digit": ("^[^[:digit:]]$",
+                      set(SWEEP_CHARS) - POSIX_CLASS_SETS["digit"]),
+    }
+
+    def test_code_point_sweep(self, spark):
+        schema = SObject(tuple(
+            (col, SText((TRegex(pattern),)))
+            for col, (pattern, _) in self.COLUMNS.items()
+        ))
+        cols = list(self.COLUMNS)
+        df = spark.createDataFrame(
+            [(i, *[ch] * len(cols)) for i, ch in enumerate(SWEEP_CHARS)],
+            ["i"] + cols,
+        )
+        rows = validate(df, schema).annotated.orderBy("i").collect()
+        assert len(rows) == len(SWEEP_CHARS)
+        for row, ch in zip(rows, SWEEP_CHARS):
+            spark_bad = {v["path"] for v in row["_violations"]}
+            interp = parse_and_validate(schema, {c: ch for c in cols})
+            interp_bad = {path for path, _ in interp.violations}
+            expected_bad = {
+                "." + col for col, (_, members) in self.COLUMNS.items()
+                if ch not in members
+            }
+            assert spark_bad == interp_bad == expected_bad, (
+                f"U+{ord(ch):04X}", spark_bad ^ expected_bad,
+                interp_bad ^ expected_bad,
+            )
+        # é (U+00E9) is a letter to Data.Char, not to the C-locale class
+        e_acute = rows[0xE9]
+        assert ".alpha" in {v["path"] for v in e_acute["_violations"]}
+        assert {v["error"] for v in e_acute["_violations"]
+                if v["path"] == ".alpha"} == {"must match ^[[:alpha:]]$"}
 
 
 class TestPreflight:

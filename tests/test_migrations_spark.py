@@ -486,6 +486,10 @@ class TestVersionedPreflight:
     @pytest.mark.parametrize("bad, error", [
         (SText((TGe(5), TLe(1))), UnsatisfiableSchema),
         (SText((TRegex("([a-z"),)), ValueError),
+        # compiles in Python re, not in the JVM's java.util.regex
+        (SText((TRegex("(?P<x>a)"),)), ValueError),
+        # no such POSIX class
+        (SText((TRegex("^[[:letter:]]+$"),)), ValueError),
     ])
     def test_bad_revision_raises_when_query_is_built(self, spark, bad, error):
         from schematic_spark.migrations import validate_versioned_json_strings
@@ -513,6 +517,33 @@ class TestVersionedPreflight:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+class TestVersionedDispatchQuery:
+    def test_build_runs_only_the_parquet_schema_read(self, spark):
+        """The rejected count rides the returned query: building it
+        starts no job beyond reading the input's parquet footer."""
+        import __spark_entry__ as entry
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = "versioned-dispatch-build"
+        sc.setJobGroup(group, "versioned_dispatch_documents build")
+        try:
+            df = entry.queries()["versioned_dispatch_documents"](
+                spark, entry.SF_SMOKE
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        stage_names = [
+            tracker.getStageInfo(s).name
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert all(n.startswith("parquet at") for n in stage_names), \
+            stage_names
+        assert dict(df.dtypes)["n_rejected"] == "bigint"
 
 
 class TestCheckpointWaves:

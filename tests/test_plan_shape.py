@@ -97,6 +97,31 @@ class TestPlanShapeRound2:
         assert "ArrowEvalPython" not in plan, plan
         assert "BatchEvalPython" not in plan, plan
 
+    def test_posix_class_validation_plans_no_python(self, spark):
+        """POSIX bracket classes run in ``rlike`` like every other
+        pattern: neither the batch validation nor the streaming running
+        totals over it plan a Python node."""
+        from schematic_spark.schema import TRegex
+        from schematic_spark.streaming import running_verdict_totals
+
+        spec = SObject((
+            ("text", SText((TRegex("^[[:print:][:space:]]*$"),))),
+            ("lang", SText((TRegex("^[[:lower:]]+$"),))),
+        ))
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        plan = _plan(validate(docs, spec).annotated)
+        assert "ArrowEvalPython" not in plan, plan
+        assert "Python" not in plan, plan
+        stream = spark.readStream.format("rate").load().select(
+            F.col("value").cast("string").alias("text"),
+            F.lit("en").alias("lang"),
+        )
+        totals = running_verdict_totals(validate(stream, spec).annotated,
+                                        "lang")
+        analyzed = totals._jdf.queryExecution().analyzed().toString()
+        assert "FlatMapGroupsInPandasWithState" not in analyzed, analyzed
+        assert "Python" not in analyzed, analyzed
+
     def test_union_validation_is_shuffle_free(self, spark):
         from pyspark.sql.types import (
             DoubleType, StringType, StructField, StructType,

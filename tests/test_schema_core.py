@@ -306,6 +306,8 @@ class TestVerifier:
         assert regex_length_bounds("a+") == (1, None)
         assert regex_length_bounds("(ab|abc)x?") == (2, 4)
         assert regex_length_bounds(UUID_REGEX) == (36, 36)
+        # a POSIX class is one character, not a set plus a literal ]
+        assert regex_length_bounds("^[[:alpha:]]$") == (1, 1)
 
     def test_regex_vs_length_contradiction(self):
         # regex forces exactly 36 chars; TLt 10 is unsatisfiable
