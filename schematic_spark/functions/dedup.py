@@ -20,6 +20,22 @@ Five strategies, each chosen for a different scale/recall point:
 All signature computation is a shuffle-free projection; only the
 candidate-pair discovery shuffles, and it shuffles signatures, not
 documents.
+
+Candidate pairs come from two private helpers, shared by MinHash bands,
+SimHash blocks, hyperplane buckets, winnowing fingerprints
+(``text.shared_passage_pairs``) and contamination n-grams:
+
+* ``_cap_key_groups(rows, keys, cap)`` drops every row of a key group
+  larger than ``cap`` (``None`` keeps all). A group of B rows would
+  emit B(B-1)/2 pairs; hot keys dominate join cost. The count is a
+  window over the key partitioning, which the join that follows
+  reuses (a groupBy + join cap would shuffle the rows twice).
+* ``_key_pairs(rows, id_col, keys, cap)`` caps, then self-joins on
+  ``keys`` with ``a.id < b.id``; callers select from the ``a``/``b``
+  aliases.
+
+Nothing here caches: a persisted RDD would outlive the call in a
+long-lived session, so each join side recomputes its projection.
 """
 
 from __future__ import annotations
@@ -31,14 +47,42 @@ from .text import normalized_text, doc_fingerprint
 from ..sources.layout import spread_for_compute
 
 # ---------------------------------------------------------------------------
+# Candidate-pair discovery (see the module docstring)
+# ---------------------------------------------------------------------------
+
+def _cap_key_groups(
+    rows: DataFrame, keys: list[str], cap: int | None
+) -> DataFrame:
+    if cap is None:
+        return rows
+    return (
+        rows.withColumn(
+            "_n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        )
+        .where(F.col("_n") <= cap)
+        .drop("_n")
+    )
+
+
+def _key_pairs(
+    rows: DataFrame, id_col: str, keys: list[str], cap: int | None
+) -> DataFrame:
+    rows = _cap_key_groups(rows, keys, cap)
+    a, b = rows.alias("a"), rows.alias("b")
+    return a.join(b, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+                  + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+
+
+# ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
 def exact_duplicate_groups(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(fingerprint, n_docs, doc_ids[≤20]) for every group of exact
-    (normalized) duplicates."""
+    """(fingerprint, n_docs, doc_ids) for every group of exact
+    (normalized) duplicates; ``doc_ids`` holds the group's 20 smallest
+    ids, ascending."""
     return (
         df.select(
             F.col(id_col), doc_fingerprint(text_col).alias("fingerprint")
@@ -46,7 +90,8 @@ def exact_duplicate_groups(
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.slice(F.collect_list(id_col), 1, 20).alias("doc_ids"),
+            F.slice(F.array_sort(F.collect_list(id_col)), 1, 20)
+            .alias("doc_ids"),
         )
         .where(F.col("n_docs") > 1)
     )
@@ -55,11 +100,11 @@ def exact_duplicate_groups(
 def drop_exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Keep one doc (min id) per fingerprint group. Two-column shuffle
-    (fingerprint, id) + broadcast-able winners join when small; at scale
-    the window variant below keeps it one shuffle."""
+    """Keep one doc (min id) per fingerprint group: a ``row_number``
+    window over the fingerprint partitioning, one shuffle and no
+    join."""
     fp = doc_fingerprint(text_col).alias("_fp")
-    w =Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
     return (
         df.select("*", fp)
         .withColumn("_rn", F.row_number().over(w))
@@ -134,7 +179,7 @@ def minhash_lsh_candidates(
     seed: int = 42,
     max_bucket_size: int = 500,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a, id_b, band) from banded MinHash.
+    """Candidate near-dup pairs (id_a, id_b) from banded MinHash.
 
     **Banding knob** (rows-per-band r = num_hashes/bands): the
     candidate probability for a pair with Jaccard s is 1-(1-s^r)^b,
@@ -155,17 +200,10 @@ def minhash_lsh_candidates(
     shingles collapse many docs into one bucket → quadratic pair
     explosion); this is the standard web-scale LSH hygiene — a bucket
     with B docs contributes B(B-1)/2 candidate pairs, so one 10^6-doc
-    bucket would dominate the whole job. Signature rows are cached:
-    the self-join would otherwise recompute the full shingle+minhash
-    pipeline for both sides."""
+    bucket would dominate the whole job."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    # NO spread_for_compute here (r6, measured): the per-doc xxhash
-    # chain is light relative to this pipeline's stage count, and the
-    # fan-out's extra shuffle + 32-task stages cost MORE than the
-    # single-task compute at small scale (1.04 s → 2.26 s regression
-    # at sf0.1); at large scale the scan already has enough splits.
     # two projections: shingles FIRST as a column, signature second.
     # minhash_signature references its input once per hash function; fed
     # the raw shingle EXPRESSION it would inline (and recompute) the
@@ -210,29 +248,15 @@ def minhash_lsh_candidates(
             ])
         ).alias("bb"),
     ).select(id_col, F.col("bb.band").alias("band"),
-             F.col("bb.bucket").alias("bucket")).cache()
-    sizes = band_rows.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("_bn")
-    )
-    eligible = sizes.where(F.col("_bn") <= max_bucket_size) \
-                    .select("band", "bucket")
-    band_rows = band_rows.join(eligible, ["band", "bucket"])
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+             F.col("bb.bucket").alias("bucket"))
+    return (
+        _key_pairs(band_rows, id_col, ["band", "bucket"], max_bucket_size)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -253,7 +277,7 @@ def ngram_jaccard_pairs(
     ).select(
         F.col(id_col),
         shingles_from_tokens(F.col("_tok"), shingle_n).alias("_sh"),
-    ).cache()  # joined twice (both pair sides)
+    )
     out = (
         candidates
         .join(sh.withColumnRenamed(id_col, "id_a")
@@ -398,28 +422,29 @@ def simhash_near_duplicates(
     )
     n_blocks = max_hamming + 1
     width = SIMHASH_BITS // n_blocks
+    # _sig rides INSIDE the exploded struct, and explode_OUTER + a
+    # post-Generate isNotNull filter: the Hamming filter implies
+    # isnotnull(_sig), and were _sig a pass-through column that
+    # constraint would be pushed below the Generate into the scan's
+    # Filter, evaluating the md5 signature twice per row (CLAUDE.md
+    # pushdown trap)
     blocks = sig.select(
-        id_col, "_sig",
-        F.explode(F.array(*[
+        id_col,
+        F.explode_outer(F.array(*[
             F.struct(
                 F.lit(b).alias("block"),
                 F.shiftrightunsigned(F.col("_sig"), b * width)
                 .bitwiseAND(F.lit((1 << width) - 1)).alias("key"),
+                F.col("_sig").alias("sig"),
             )
             for b in range(n_blocks)
         ])).alias("bk"),
-    ).select(id_col, "_sig", F.col("bk.block").alias("block"),
-             F.col("bk.key").alias("key")).cache()
-    # cached: the self-join would otherwise evaluate the per-token md5
-    # signature HOFs once per side
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+    ).where(F.col("bk").isNotNull()).select(
+        id_col, F.col("bk.sig").alias("_sig"),
+        F.col("bk.block").alias("block"), F.col("bk.key").alias("key"),
+    )
+    return (
+        _key_pairs(blocks, id_col, ["block", "key"], None)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -430,7 +455,6 @@ def simhash_near_duplicates(
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
 
 
 # ---------------------------------------------------------------------------
@@ -513,25 +537,15 @@ def embedding_near_duplicates(
         )
     dim = stats["hi"]
     # spread: n_planes × dim interpreted mults per row — don't let one
-    # small input file serialize the signature stage (no-op at scale).
-    # Cached: consumed by the bucket-size agg, the probe side and the
-    # build side (three consumers; minhash caches its band rows for the
-    # same reason).
+    # small input file serialize the signature stage (no-op at scale)
     sig = spread_for_compute(df).select(
         F.col(id_col), F.col(vec_col),
         hyperplane_signature(
             F.col(vec_col), dim=dim, n_planes=n_planes, seed=seed
         ).alias("_bucket"),
-    ).cache()
-    # bucket-size cap: rows of oversized buckets are dropped up front —
-    # the bucket universe is ≤ 2**n_planes rows, so the eligible set is
-    # bounded regardless of corpus size (AQE broadcasts it)
-    sizes = sig.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bn"))
-    eligible = sizes.where(F.col("_bn") <= max_bucket_size) \
-                    .select("_bucket")
-    sig = sig.join(eligible, "_bucket").select(
-        id_col, vec_col, "_bucket"
     )
+    # rows of oversized buckets are dropped before the probe fan-out
+    sig = _cap_key_groups(sig, ["_bucket"], max_bucket_size)
     # probe set: exact bucket plus its 1-bit neighbours
     probes = [F.col("_bucket")] + [
         F.col("_bucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)
@@ -790,27 +804,17 @@ def ngram_contamination(
 
     Scale shape: both sides reduce to (distinct-gram, id) rows — the
     token arrays are materialized as columns before the gram HOF (the
-    repo's CSE rule). With ``max_gram_group=None`` (exact recall) the
-    sides meet in ONE equi-join on the gram string; shuffle volume is
-    linear in total distinct grams, but one boilerplate gram shared by
-    millions of docs makes that join quadratic in its group.
-
-    Passing ``max_gram_group`` switches to the capped ONE-EXCHANGE
-    shape (the ``shared_passages`` pattern): both sides union with a
-    side tag, a window ``count(*) OVER (PARTITION BY gram)`` rides the
-    single gram-key exchange, rows of grams whose total occurrence
-    count across BOTH inputs (the cap universe is exactly the union of
-    the two DataFrames as passed — caller-side filters shape it)
-    exceeds the cap are dropped in place, and the surviving per-gram
-    id lists (≤ cap entries, so ≤ cap² pairs per gram by construction)
-    split by side and explode into (corpus, bench) pairs — no second
-    gram shuffle, no anti-joins. Hot-gram partitions before the filter
-    spill via the window sorter rather than OOM. The drop is explicit
-    in the plan, never silent — leave the cap None to keep exact
+    repo's CSE rule) — and union with a side tag. ``_cap_key_groups``
+    drops the rows of grams whose occurrence count across BOTH inputs
+    exceeds ``max_gram_group`` (the cap universe is exactly the union of
+    the two DataFrames as passed — caller-side filters shape it; one
+    boilerplate gram shared by millions of docs would make the join
+    quadratic in its group). The result splits by side and the sides
+    meet in one equi-join on ``(xxhash64(gram), gram)``, which reuses
+    the cap window's partitioning. Leave the cap None to keep exact
     recall.
     """
     def gram_rows(df: DataFrame, side: int) -> DataFrame:
-        # no spread_for_compute: measured slower (contamination_src0 0.887x)
         toks = df.select(
             F.col(id_col).alias("id"),
             tokens_column(text_col).alias("_t"),
@@ -823,46 +827,23 @@ def ngram_contamination(
             F.lit(side).alias("_side"),
         )
 
-    cg = gram_rows(corpus, 0)
-    bg = gram_rows(benchmark, 1)
-
-    if max_gram_group is None:
-        return (
-            cg.select(F.col("id").alias("corpus_id"), "gram")
-            .join(bg.select(F.col("id").alias("bench_id"), "gram"), "gram")
-            .groupBy("corpus_id", "bench_id")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
-
-    tagged = cg.unionAll(bg)
-    # partition the window by (xxhash64(gram), gram), not gram alone:
-    # the window sorter compares 8-byte prefixes first, and natural-
-    # language grams share long prefixes ("the quick brown ...") so a
-    # string-keyed sort degrades to full record comparisons — the hash
-    # prefix is near-unique and cut the sf0.1 single-shot 2.06→1.58 s.
-    # Grouping still includes the gram string, so equality stays EXACT
-    # (hash collisions merge nothing).
-    tagged = tagged.withColumn("_h", F.xxhash64("gram"))
-    kept = tagged.withColumn(
-        "_n", F.count(F.lit(1)).over(Window.partitionBy("_h", "gram"))
-    ).where(F.col("_n") <= max_gram_group)
-    # struct-wrap before collect_list: NULL ids must survive (the
-    # generated docs plant NULL doc_ids; collect_list skips bare NULLs)
-    per_gram = kept.groupBy("_h", "gram").agg(  # reuses the window's exchange
-        F.collect_list(
-            F.when(F.col("_side") == 0, F.struct(F.col("id")))
-        ).alias("_cids"),
-        F.collect_list(
-            F.when(F.col("_side") == 1, F.struct(F.col("id")))
-        ).alias("_bids"),
+    # key (xxhash64(gram), gram), not gram alone: the sorters compare
+    # 8-byte prefixes first, and natural-language grams share long
+    # prefixes ("the quick brown ...") so a string-keyed sort degrades
+    # to full record comparisons. The key still includes the gram
+    # string, so equality stays EXACT (hash collisions merge nothing).
+    kept = _cap_key_groups(
+        gram_rows(corpus, 0).unionAll(gram_rows(benchmark, 1))
+        .withColumn("_h", F.xxhash64("gram")),
+        ["_h", "gram"], max_gram_group,
     )
+
+    def side(tag: int, name: str) -> DataFrame:
+        return kept.where(F.col("_side") == tag) \
+                   .select(F.col("id").alias(name), "_h", "gram")
+
     return (
-        per_gram.select(F.explode("_cids").alias("_c"), "_bids")
-        .select(
-            F.col("_c.id").alias("corpus_id"),
-            F.explode("_bids").alias("_b"),
-        )
-        .select("corpus_id", F.col("_b.id").alias("bench_id"))
+        side(0, "corpus_id").join(side(1, "bench_id"), ["_h", "gram"])
         .groupBy("corpus_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )

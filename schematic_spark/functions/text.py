@@ -268,6 +268,7 @@ def shared_passage_pairs(
     # post-Generate isNotNull filter cannot be pushed below the
     # Generate, so the fingerprint projection evaluates exactly once.
     from ..sources.layout import spread_for_compute
+    from .dedup import _key_pairs
 
     # the per-doc md5 k-gram chain is the map-side cost; one small
     # input file would serialize it on a single task (no-op at scale)
@@ -276,24 +277,8 @@ def shared_passage_pairs(
     ).select(
         F.col(id_col), F.explode_outer("fingerprints").alias("fp")
     ).where(F.col("fp").isNotNull())
-    if max_fp_group is not None:
-        # group-size cap as a window count over the SAME fp shuffle the
-        # self-join needs — NOT a groupBy(fp)+anti-join, which would
-        # re-run the per-document fingerprinting (the expensive md5 HOF
-        # chain) a second time for the aggregate's partial pass. Here
-        # the fingerprint computation sits below the single Exchange:
-        # one pass, and the join reuses the partitioning.
-        fps = (
-            fps.withColumn(
-                "_n", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-            )
-            .where(F.col("_n") <= max_fp_group)
-            .drop("_n")
-        )
-    a, b = fps.alias("a"), fps.alias("b")
     return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        _key_pairs(fps, id_col, ["fp"], max_fp_group)
         .groupBy(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),

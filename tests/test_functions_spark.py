@@ -18,9 +18,11 @@ from schematic_spark.functions import (
     lang_id,
     lsh_topk,
     minhash_near_duplicates,
+    ngram_contamination,
     quality_features,
     quality_score,
     simhash_catalyst,
+    shared_passage_pairs,
     simhash_near_duplicates,
     synthetic_media,
     train_centroids,
@@ -103,6 +105,18 @@ class TestExactDedup:
         kept = drop_exact_duplicates(df)
         assert kept.count() == 2
         assert {r["doc_id"] for r in kept.collect()} == {1, 3}
+
+    def test_large_group_lists_smallest_ids(self, spark):
+        """A group larger than 20 lists its 20 smallest ids, ascending,
+        whatever order the rows arrive in across partitions."""
+        ids = list(range(100, 125))[::-1]
+        df = spark.createDataFrame(
+            [(i, "same text") for i in ids] + [(1, "other")],
+            "doc_id long, text string",
+        ).repartition(5)
+        (row,) = exact_duplicate_groups(df).collect()
+        assert row["n_docs"] == 25
+        assert row["doc_ids"] == list(range(100, 120))
 
 
 class TestMinHash:
@@ -607,6 +621,34 @@ class TestWinnowing:
         }
         assert ("a", "b") in pairs  # copied passage found despite edits
         assert all(k == ("a", "b") for k in pairs)  # no false pairs
+
+
+def _contamination(docs, cap):
+    src0 = F.col("source") == "src0"
+    return ngram_contamination(
+        docs.where(~src0), docs.where(src0), max_gram_group=cap)
+
+
+_PAIR_CALLS = {
+    "minhash": lambda d, e: minhash_near_duplicates(
+        d, threshold=0.5, bands=16),
+    "simhash": lambda d, e: simhash_near_duplicates(d),
+    "shared_passages": lambda d, e: shared_passage_pairs(d),
+    "embedding": lambda d, e: embedding_near_duplicates(e),
+    "contamination": lambda d, e: _contamination(d, None),
+    "contamination_capped": lambda d, e: _contamination(d, 100),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIR_CALLS))
+def test_pair_discovery_leaves_no_cache(spark, session_state, name):
+    """A pair-discovery call caches nothing that outlives it: after its
+    result is collected, the session holds no persistent RDD and no
+    cached plan."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    _PAIR_CALLS[name](docs, emb).collect()
+    assert session_state.held() == ([], False)
 
 
 def test_resize_quarantine_keeps_original_payload(spark):

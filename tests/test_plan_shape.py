@@ -290,22 +290,27 @@ class TestPlanShapeRound3:
         assert not filters_with_tree, plan
 
     def test_shared_passage_pairs_single_fingerprint_pass(self, spark):
-        """The fingerprint HOF chain (regex normalize + per-gram md5)
-        must appear below the Generate exactly once: neither an
-        inferred size()>0 Filter nor the hot-group cap may re-expand
-        it (the O(len^2)-per-document pushdown trap)."""
-        from schematic_spark.functions import shared_passage_pairs
+        """The md5 HOF chains — the winnowing fingerprints of
+        ``shared_passage_pairs`` and the signature of
+        ``simhash_near_duplicates`` — must appear below the Generate
+        exactly once: neither an inferred size()>0 / isnotnull Filter
+        nor a hot-group cap may re-expand them (the
+        O(len^2)-per-document pushdown trap)."""
+        from schematic_spark.functions import (
+            shared_passage_pairs, simhash_near_duplicates,
+        )
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        out = shared_passage_pairs(docs)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert not any(
-            "Filter" in ln and "md5" in ln for ln in plan.splitlines()
-        ), plan
-        # one fingerprinting projection per join side at most — the
-        # md5 gram-hash lambda must not be duplicated beyond the
-        # self-join's two identical subtrees
-        assert plan.count("md5") <= 2, plan
+        for out in (shared_passage_pairs(docs),
+                    simhash_near_duplicates(docs)):
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            assert not any(
+                "Filter" in ln and "md5" in ln for ln in plan.splitlines()
+            ), plan
+            # one md5 projection per join side at most — the lambda must
+            # not be duplicated beyond the self-join's two identical
+            # subtrees
+            assert plan.count("md5") <= 2, plan
 
 
 class TestPartitionPruning:
