@@ -12,6 +12,11 @@ counts the plan operators that encode the engine's scale claims:
 - nested-loop / cartesian joins (only 1-row scalar attachments allowed)
 - `WholeStageCodegen` spans (JVM-side execution)
 
+It also reports, without gating on them, each query builder's build
+seconds and the py4j round trips it makes (the driver-side cost paid
+before any Spark job of the query; builders that run jobs while they
+build include them).
+
 Usage: python scripts/plan_audit.py [sf_dir] > BENCH/plan_audit_rN.md
 
 Exits 1 when a non-media query has a Python exec node, or a plan fails
@@ -22,6 +27,8 @@ from __future__ import annotations
 
 import re
 import sys
+import threading
+import time
 
 PYTHON_NODE = re.compile(
     r"(?:BatchEvalPython|ArrowEvalPython|MapInPandas"
@@ -32,6 +39,25 @@ PYTHON_NODE = re.compile(
 def _listed(names: list[str]) -> str:
     return (f"{len(names)} "
             f"({', '.join(names) if names else 'ZERO — invariant holds'})")
+
+
+def _timed_build(spark, build):
+    """(result, seconds, py4j round trips) of ``build()``; only this
+    thread's commands count, not the finalizer thread's releases."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, trips = client.send_command, threading.get_ident(), [0]
+
+    def counted(*args, **kwargs):
+        trips[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    start = time.perf_counter()
+    try:
+        out = build()
+    finally:
+        del client.send_command
+    return out, time.perf_counter() - start, trips[0]
 
 
 def main() -> int:
@@ -54,7 +80,8 @@ def main() -> int:
     rows = []
     for name, fn in entry.queries().items():
         try:
-            df = fn(spark, sf_dir)
+            df, build_s, trips = _timed_build(
+                spark, lambda: fn(spark, sf_dir))
             df.collect()  # materialize so AQE's FINAL plan is audited
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001 — audit must cover all
@@ -77,6 +104,8 @@ def main() -> int:
                 or re.findall(r"BroadcastNestedLoopJoin", plan)),
             "cartesian": len(re.findall(r"CartesianProduct", plan)),
             "codegen": len(set(re.findall(r"\*\((\d+)\)", plan))),
+            "build_s": build_s,
+            "py4j": trips,
         }
         rows.append((name, counts, None))
 
@@ -90,15 +119,16 @@ def main() -> int:
     if failed:
         print(f"\nPlan build failures: {failed}")
     print("\n| query | exchanges | python | bnlj | cartesian |"
-          " codegen spans |")
-    print("|---|---|---|---|---|---|")
+          " codegen spans | build s | py4j round trips |")
+    print("|---|---|---|---|---|---|---|---|")
     for name, c, _ in sorted(
         rows, key=lambda r: -(r[1] or {}).get("exchange", 0)
     ):
         if c is None:
             continue
         print(f"| {name} | {c['exchange']} | {c['python']} |"
-              f" {c['bnlj']} | {c['cartesian']} | {c['codegen']} |")
+              f" {c['bnlj']} | {c['cartesian']} | {c['codegen']} |"
+              f" {c['build_s']:.2f} | {c['py4j']} |")
     return 1 if bad_py or failed else 0
 
 

@@ -119,7 +119,117 @@ class TestExactDedup:
         assert row["doc_ids"] == list(range(100, 120))
 
 
+def _unrolled_signature(hs, num_hashes, seed):
+    """The reference MinHash signature: one ``array_min`` Column per
+    hash function, as it was first written."""
+    return F.array(*[
+        F.array_min(F.transform(
+            hs, lambda h: F.xxhash64(h, F.lit(seed * 1000 + i))))
+        for i in range(num_hashes)
+    ])
+
+
+def _unrolled_band_rows(hashed, num_hashes, bands, seed):
+    """The reference band rows: one struct per band, one signature
+    element Column per row of the band."""
+    r = num_hashes // bands
+    sig = hashed.select(
+        "doc_id", _unrolled_signature(F.col("hs"), num_hashes, seed)
+        .alias("_sig"))
+    return sig.select("doc_id", F.explode(F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.concat_ws(",", *[
+                F.col("_sig")[b * r + j].cast("string") for j in range(r)
+            ])).alias("bucket"),
+        )
+        for b in range(bands)
+    ])).alias("bb")).select("doc_id", "bb.band", "bb.bucket")
+
+
+def _round_trips(spark, build) -> int:
+    """py4j commands this thread sends while ``build()`` runs; the
+    finalizer thread's object releases are not counted."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, n = client.send_command, threading.get_ident(), [0]
+
+    def counted(*args, **kwargs):
+        n[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        del client.send_command
+    return n[0]
+
+
+# NULL, empty and whitespace-only text; 1, 2, 3 and more tokens;
+# repeated shingles; an exact duplicate
+EDGE_DOCS = [
+    (1, None), (2, ""), (3, "  \t "), (4, "one"), (5, "one two"),
+    (6, "one two three"), (7, "a b a b a b a b"),
+    (8, "the quick brown fox jumps over the lazy dog again"),
+    (9, "the quick brown fox jumps over the lazy dog again"),
+    (10, "The quick, brown fox jumps over the lazy cat again!"),
+]
+
+
 class TestMinHash:
+    @pytest.mark.parametrize("num_hashes,bands,seed", [
+        (32, 16, 42), (128, 32, 42),
+        (32, 8, 2_147_484),  # seeds past int32 are hashed as longs
+    ])
+    def test_fold_matches_unrolled_reference(
+        self, spark, num_hashes, bands, seed
+    ):
+        """The one-fold signature and the one-transform band keys give
+        the unrolled formulas' arrays, types and (band, bucket) rows."""
+        from schematic_spark.functions import minhash_signature
+        from schematic_spark.functions.dedup import (
+            _band_rows, shingles_from_tokens, tokens_column,
+        )
+
+        docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+        hashed = docs.select(
+            "doc_id", tokens_column("text").alias("_tok")
+        ).select("doc_id", F.transform(
+            shingles_from_tokens(F.col("_tok")), lambda s: F.xxhash64(s)
+        ).alias("hs")).unionByName(spark.createDataFrame(
+            [(11, None), (12, [])], "doc_id long, hs array<bigint>"))
+        got, ref = (
+            hashed.select("doc_id", sig(F.col("hs"), num_hashes, seed)
+                          .alias("sig"))
+            for sig in (minhash_signature, _unrolled_signature)
+        )
+        assert got.schema == ref.schema
+        rows = sorted(got.collect())
+        assert rows == sorted(ref.collect())
+        assert rows[-1]["sig"] == rows[-2]["sig"] == [None] * num_hashes
+
+        bands_got = _band_rows(
+            docs, "text", "doc_id", num_hashes, bands, 3, seed)
+        bands_ref = _unrolled_band_rows(
+            hashed.where("doc_id <= 10"), num_hashes, bands, seed)
+        assert bands_got.schema == bands_ref.schema
+        assert sorted(bands_got.collect()) == sorted(bands_ref.collect())
+
+    def test_build_cost_does_not_grow_with_hashes(self, spark):
+        """Building the query costs the same py4j round trips at 128
+        hashes and 32 bands as at 32 and 16 (an unrolled signature
+        costs thousands more)."""
+        docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        minhash_near_duplicates(docs)  # first build resolves JVM members
+        small, large = (
+            _round_trips(spark, lambda: minhash_near_duplicates(
+                docs, num_hashes=n, bands=b))
+            for n, b in ((32, 16), (128, 32))
+        )
+        assert abs(large - small) <= 20, (small, large)
+
     def test_near_duplicates(self, spark):
         base = (
             "the quick brown fox jumps over the lazy dog while the sun "
@@ -500,6 +610,24 @@ class TestNearDupComponents:
             ).collect()
         }
         assert comp == {i: 0 for i in range(41)}
+
+    def test_distributed_path_keeps_only_the_result_checkpoint(
+        self, spark, session_state
+    ):
+        """Each round's localCheckpoint is unpersisted once the next one
+        has materialized: the one persisted RDD left behind backs the
+        returned labels, and no plan is cached."""
+        from schematic_spark.functions import near_duplicate_components
+
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+        )
+        comp = near_duplicate_components(pairs, driver_threshold=0)
+        rdds, cached = session_state.held()
+        assert (len(rdds), cached) == (1, False), rdds
+        checkpoint = comp._jdf.queryExecution().analyzed().child().rdd()
+        assert rdds == [checkpoint.id()]
+        assert {r["component"] for r in comp.collect()} == {0}
 
     def test_nonconvergence_raises_not_silent(self, spark):
         """max_iter too small must RAISE, never return split components

@@ -312,6 +312,18 @@ class TestPlanShapeRound3:
             # subtrees
             assert plan.count("md5") <= 2, plan
 
+    def test_simhash_self_join_evaluates_md5_once(self, spark):
+        """Both sides of SimHash's block self-join read one exchange of
+        the block rows, whichever join AQE picks: the final executed
+        plan has the md5 signature in one subtree only."""
+        from schematic_spark.functions import simhash_near_duplicates
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        out = simhash_near_duplicates(docs)
+        out.collect()
+        final = _plan(out).split("== Initial Plan ==")[0]
+        assert final.count("md5(") == 1, final
+
 
 class TestPartitionPruning:
     def test_partitioned_sink_prunes_at_scan(self, spark, tmp_path):
