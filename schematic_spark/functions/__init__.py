@@ -1,10 +1,7 @@
 from .dedup import (  # noqa: F401
-    cosine_similarity,
-    dot,
     drop_exact_duplicates,
     embedding_near_duplicates,
     exact_duplicate_groups,
-    l2_norm,
     minhash_lsh_candidates,
     minhash_near_duplicates,
     minhash_signature,
@@ -38,11 +35,14 @@ from .sampling import (  # noqa: F401
 )
 from .split import assign_split, split_bucket  # noqa: F401
 from .similarity import (  # noqa: F401
+    cosine_similarity,
     cosine_to_query,
     cosine_topk,
+    dot,
     hyperplane_signature,
     ivf_assign,
     ivf_topk,
+    l2_norm,
     lsh_topk,
     train_centroids,
 )

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from .similarity import cosine_similarity, hyperplane_signature
 from .text import normalized_text, doc_fingerprint
 from ..sources.layout import spread_for_compute
 
@@ -337,7 +338,7 @@ def _simhash_tokens(col: Column | str) -> Column:
     )
 
 
-def simhash_catalyst(col: Column | str, bits: int = SIMHASH_BITS) -> Column:
+def simhash_catalyst(col: Column | str) -> Column:
     """SimHash computed ENTIRELY in Catalyst — zero Python anywhere:
 
     * token hash = first 15 hex chars of ``md5(token)`` parsed as int64
@@ -356,19 +357,18 @@ def simhash_catalyst(col: Column | str, bits: int = SIMHASH_BITS) -> Column:
     materialize the tokens as a column and call
     :func:`simhash_catalyst_from_tokens`.
     """
-    return simhash_catalyst_from_tokens(_simhash_tokens(col), bits)
+    return simhash_catalyst_from_tokens(_simhash_tokens(col))
 
 
-def simhash_catalyst_from_tokens(
-    toks: Column, bits: int = SIMHASH_BITS
-) -> Column:
+def simhash_catalyst_from_tokens(toks: Column) -> Column:
     # one literal; a list of F.lit Columns costs py4j round trips per bit
-    pow2 = F.expr(f"array({', '.join(f'{1 << b}L' for b in range(bits))})")
+    pow2 = F.expr(
+        f"array({', '.join(f'{1 << b}L' for b in range(SIMHASH_BITS))})")
     hashes = F.transform(
         toks,
         lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
     )
-    zeros = F.array_repeat(F.lit(0).cast("long"), bits)
+    zeros = F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS)
     votes = F.aggregate(
         hashes, zeros,
         lambda acc, h: F.zip_with(
@@ -460,31 +460,6 @@ def simhash_near_duplicates(
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array columns — one ``aggregate`` over
-    ``zip_with``, JVM-side."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    """Euclidean norm of an array column, JVM-side."""
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine over two array<float/double> columns — JVM higher-order
-    functions, no UDF."""
-    return dot(a, b) / F.greatest(
-        l2_norm(a) * l2_norm(b), F.lit(1e-12)
-    )
-
-
 def embedding_near_duplicates(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -511,8 +486,6 @@ def embedding_near_duplicates(
     ``n_planes`` (buckets scale 2^p) rather than the cap when recall on
     dense clusters matters."""
     from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from .similarity import hyperplane_signature
 
     id_type = df.schema[id_col].dataType
     empty_schema = StructType([
@@ -545,13 +518,17 @@ def embedding_near_duplicates(
     )
     # rows of oversized buckets are dropped before the probe fan-out
     sig = _cap_key_groups(sig, ["_bucket"], max_bucket_size)
-    # probe set: exact bucket plus its 1-bit neighbours
-    probes = [F.col("_bucket")] + [
-        F.col("_bucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)
-    ]
+    # probe set: exact bucket plus its 1-bit neighbours, one XOR per
+    # mask of a literal (0, 1, 2, 4, ...) typed like the bucket id
+    suffix = "L" if n_planes >= 32 else ""
+    masks = F.expr("array(" + ", ".join(
+        f"{m}{suffix}" for m in [0] + [1 << b for b in range(n_planes)]
+    ) + ")")
     probed = sig.select(
         id_col, vec_col,
-        F.explode(F.array(*probes)).alias("_probe"),
+        F.explode(F.transform(
+            masks, lambda m: F.col("_bucket").bitwiseXOR(m)
+        )).alias("_probe"),
     )
     a = probed.alias("a")
     b = sig.alias("b")

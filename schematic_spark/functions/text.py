@@ -137,9 +137,9 @@ def lang_scores(col: Column | str) -> Column:
     return F.struct(*scores)
 
 
-def lang_id(col: Column | str, *, min_score: float = 0.01) -> Column:
-    """Best-scoring language code, or 'und' when nothing clears
-    ``min_score``. Pure Catalyst argmax via a when-chain."""
+def lang_id(col: Column | str) -> Column:
+    """Best-scoring language code, or 'und' when nothing scores at
+    least 0.01. Pure Catalyst argmax via a when-chain."""
     s = lang_scores(col)
     langs = list(_LANG_MARKERS)
     best = F.greatest(*[s[l] for l in langs])
@@ -147,7 +147,7 @@ def lang_id(col: Column | str, *, min_score: float = 0.01) -> Column:
     # reversed so earlier languages win ties (stable priority order)
     for lang in reversed(langs):
         expr = F.when(
-            (s[lang] >= F.lit(min_score)) & (s[lang] == best), F.lit(lang)
+            (s[lang] >= F.lit(0.01)) & (s[lang] == best), F.lit(lang)
         ).otherwise(expr)
     return expr
 

@@ -11,17 +11,13 @@ from pyspark.sql import functions as F
 from .schema.ast import SObject
 
 
-def to_json_column(schema: SObject, *, keep_nulls: bool = True) -> Column:
-    """JSON string of the spec fields in spec order."""
+def to_json_column(schema: SObject) -> Column:
+    """JSON string of the spec fields in spec order, null fields kept."""
     row = F.struct(*[F.col(n).alias(n) for n in schema.field_names()])
-    options = {"ignoreNullFields": "false"} if keep_nulls else {}
-    return F.to_json(row, options)
+    return F.to_json(row, {"ignoreNullFields": "false"})
 
 
 def serialize_rows(
-    df: DataFrame, schema: SObject, out_col: str = "json",
-    *, keep_nulls: bool = True,
+    df: DataFrame, schema: SObject, out_col: str = "json"
 ) -> DataFrame:
-    return df.withColumn(
-        out_col, to_json_column(schema, keep_nulls=keep_nulls)
-    )
+    return df.withColumn(out_col, to_json_column(schema))

@@ -39,11 +39,10 @@ def write_bucketed(
     n_buckets: int,
     *,
     path: str,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as an external parquet table hash-bucketed (and by
-    default sorted) on ``key``. Joins/aggregations keyed on ``key``
+    """Write ``df`` as an external parquet table hash-bucketed and
+    sorted on ``key``. Joins/aggregations keyed on ``key``
     against tables with the SAME bucket count then run exchange-free.
     """
     keys = [key] if isinstance(key, str) else list(key)
@@ -55,15 +54,14 @@ def write_bucketed(
         # old files on some path/catalog combinations — drop first so
         # layout metadata can never go stale vs the data
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-    writer = (
+    (
         df.write.format("parquet")
         .mode(mode)
         .option("path", path)
         .bucketBy(n_buckets, *keys)
+        .sortBy(*keys)
+        .saveAsTable(name)
     )
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(name)
 
 
 def read_bucketed(spark: SparkSession, name: str) -> DataFrame:

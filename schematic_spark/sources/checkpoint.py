@@ -164,7 +164,10 @@ def run_validation_checkpointed(
 
     bucket_col = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)) \
         .cast("int")
-    part = df.withColumn("_bucket", bucket_col)
+    # the spec compiles ONCE for the whole run; each wave filters the
+    # compiled frame on its buckets, and the filter is pushed below the
+    # validation projection into the scan
+    res = validate(df.withColumn("_bucket", bucket_col), schema)
 
     run_cols = {
         "run_id": F.lit(run_id),
@@ -191,14 +194,8 @@ def run_validation_checkpointed(
 
     totals: dict[str, int] = {}
     for wave in waves:
-        if len(waves) == 1 and not done:
-            wpart = part  # everything pending: no filter needed
-        elif len(waves) == 1:
-            # prune committed buckets in the scan filter
-            wpart = part.where(~F.col("_bucket").isin(*sorted(done)))
-        else:
-            wpart = part.where(F.col("_bucket").isin(*wave))
-        res = validate(wpart, schema)
+        ann = (res.annotated if len(wave) == n_buckets
+               else res.annotated.where(F.col("_bucket").isin(*wave)))
 
         # passes 1+2 fused (r6): the per-(bucket, verdict) metrics ride
         # the violations write via ``observe`` (CollectMetrics — the
@@ -217,7 +214,6 @@ def run_validation_checkpointed(
         wave_bounded = bool(commit_every and commit_every > 0)
         fuse = len(wave) <= _FUSE_MAX_BUCKETS
         obs = Observation()
-        ann = res.annotated
         if fuse:
             exprs = []
             for b in wave:
@@ -230,7 +226,7 @@ def run_validation_checkpointed(
                         .alias(f"__v_{b}_{v}"))
             ann = ann.observe(obs, *exprs)
         elif wave_bounded:
-            res.annotated.persist(StorageLevel.MEMORY_AND_DISK)
+            ann.persist(StorageLevel.MEMORY_AND_DISK)
 
         # pass 1: violations for the wave's buckets — ONE append, one
         # scan, bucket-partitioned files so bucket filters prune at the
@@ -255,7 +251,7 @@ def run_validation_checkpointed(
             ]
         else:
             agg = (
-                res.annotated
+                ann
                 .groupBy(F.col("_bucket").alias("bucket"),
                          F.col(VERDICT_COL).alias("verdict"))
                 .agg(
@@ -265,7 +261,7 @@ def run_validation_checkpointed(
                 .collect()
             )
             if wave_bounded:
-                res.annotated.unpersist()
+                ann.unpersist()
         metrics_rows = [
             {
                 **meta,
@@ -286,20 +282,8 @@ def run_validation_checkpointed(
              "n_rows": 0, "n_violations": 0}
             for b in wave if b not in seen_buckets
         ]
-        # repartition(1): createDataFrame slices a dozen local rows
-        # across defaultParallelism partitions, so an unpartitioned
-        # append wrote ~32 near-empty part-files per wave per table —
-        # which every resume/lineage/passfail read then re-lists and
-        # re-opens (guide §6 small-files tax). repartition, NOT
-        # coalesce: coalesce(1) makes ONE task evaluate all 32 pickled
-        # python partitions sequentially (~4 s/write measured);
-        # repartition evaluates them in parallel and shuffles a dozen
-        # rows to the single writer (0.4 s, one output file).
         if metrics_rows:
-            fmt.write(
-                spark.createDataFrame(metrics_rows).repartition(1),
-                METRICS_TABLE, mode="append",
-            )
+            _append_rows(fmt, spark, metrics_rows, METRICS_TABLE)
 
         # pass 3 (commit point): lineage rows for the wave's buckets —
         # buckets with zero rows are complete too
@@ -318,8 +302,7 @@ def run_validation_checkpointed(
             }
             for b in wave
         ]
-        fmt.write(spark.createDataFrame(lineage_rows).repartition(1),
-                  LINEAGE_TABLE, mode="append")
+        _append_rows(fmt, spark, lineage_rows, LINEAGE_TABLE)
 
     return {
         "run_id": run_id,
@@ -329,6 +312,29 @@ def run_validation_checkpointed(
         "skipped_buckets": sorted(done),
         "totals": totals,
     }
+
+
+def _append_rows(
+    fmt: TableFormat, spark: SparkSession, rows: list[dict], table: str
+) -> None:
+    """Append bookkeeping ``rows`` (dicts of int and str values, all
+    with the same keys) to ``table`` as one file. The rows travel as
+    ONE JSON string literal that ``inline(from_json(...))`` expands in
+    a one-partition relation: no Python worker starts (``createDataFrame``
+    pickles local rows through them), the build costs a handful of py4j
+    round trips whatever the row count, and no caller value is spliced
+    into SQL text. The schema is the one ``createDataFrame`` inferred:
+    columns sorted by name, ints as bigint, strings as string."""
+    ddl = ", ".join(
+        f"{k}: {'bigint' if isinstance(v, int) else 'string'}"
+        for k, v in sorted(rows[0].items())
+    )
+    data = F.from_json(
+        F.lit(json.dumps(rows)), f"array<struct<{ddl}>>",
+        {"mode": "FAILFAST"},
+    )
+    fmt.write(spark.range(1, numPartitions=1).select(F.inline(data)),
+              table, mode="append")
 
 
 def _committed_pairs(spark: SparkSession, fmt: TableFormat) -> DataFrame:

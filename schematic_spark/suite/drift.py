@@ -356,12 +356,10 @@ def chi2_drift(
     return _chi2_report(obs, base, alpha)
 
 
-def psi_from_counts(
-    current: dict, baseline: dict, *, smooth: float = 0.5
-) -> float:
+def psi_from_counts(current: dict, baseline: dict) -> float:
     """Population Stability Index over two category→count maps:
     Σ (p_cur − p_base) · ln(p_cur / p_base). Laplace smoothing
-    (``smooth`` added to every cell over the category UNION) keeps
+    (0.5 added to every cell over the category UNION) keeps
     empty cells finite and is mirrored exactly by the SQL oracle.
     Conventional reading: < 0.1 stable, 0.1–0.25 moderate shift,
     ≥ 0.25 drifted."""
@@ -371,6 +369,7 @@ def psi_from_counts(
     n2 = sum(baseline.values())
     if n1 == 0 or n2 == 0 or k == 0:
         raise ValueError("empty histogram")
+    smooth = 0.5
     psi = 0.0
     for c in cats:
         pc = (current.get(c, 0) + smooth) / (n1 + smooth * k)

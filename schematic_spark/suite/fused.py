@@ -138,7 +138,6 @@ def run_fused_suite(
     ks_buckets: int = 16,
     salt_buckets: int = 64,
     alpha: float = 0.01,
-    broadcast_dim: bool = True,
 ) -> FusedSuiteReport:
     """Run the full constraint suite (validate + stats + span-order +
     uniqueness + referential + KS/chi² drift) in three jobs. See the
@@ -208,7 +207,7 @@ def run_fused_suite(
             refs.where(F.col(ref_col).isNotNull()),
             dim,
             ref_col,
-            broadcast=broadcast_dim,
+            broadcast=True,
         ).count()
         cur_hist = {
             b: v

@@ -146,14 +146,10 @@ def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     )
 
 
-def length_histogram(
-    df: DataFrame, column: str, *, log2_buckets: bool = True
-) -> DataFrame:
-    """Histogram of string length (or array size) — (bucket, lo, hi, n).
-
-    ``log2_buckets`` caps cardinality at ~64 buckets regardless of scale;
-    exact-length histograms (log2_buckets=False) are fine for bounded
-    domains like span counts.
+def length_histogram(df: DataFrame, column: str) -> DataFrame:
+    """Histogram of string length (or array size) — (bucket, lo, hi, n)
+    over log2 buckets, so cardinality stays at ~64 buckets regardless
+    of scale.
     """
     dt = dict((f.name, f.dataType) for f in df.schema.fields)[column]
     ln = (
@@ -161,32 +157,25 @@ def length_histogram(
         if isinstance(dt, ArrayType)
         else F.length(F.col(column))
     )
-    if log2_buckets:
-        bucket = (
-            F.when(ln.isNull(), F.lit(-1))
-            .when(ln <= 0, F.lit(0))
-            .otherwise(F.floor(F.log2(ln.cast("double"))) + 1)
-            .cast("int")
-        )
-        out = (
-            df.select(bucket.alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn(
-                "lo",
-                F.when(F.col("bucket") <= 0, F.lit(None))
-                 .otherwise(F.pow(F.lit(2.0), F.col("bucket") - 1).cast("long")),
-            )
-            .withColumn(
-                "hi",
-                F.when(F.col("bucket") <= 0, F.lit(None))
-                 .otherwise((F.pow(F.lit(2.0), F.col("bucket")) - 1).cast("long")),
-            )
-        )
-        return out.select("bucket", "lo", "hi", "n").orderBy("bucket")
-    return (
-        df.select(ln.alias("length"))
-        .groupBy("length")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("length")
+    bucket = (
+        F.when(ln.isNull(), F.lit(-1))
+        .when(ln <= 0, F.lit(0))
+        .otherwise(F.floor(F.log2(ln.cast("double"))) + 1)
+        .cast("int")
     )
+    out = (
+        df.select(bucket.alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .withColumn(
+            "lo",
+            F.when(F.col("bucket") <= 0, F.lit(None))
+             .otherwise(F.pow(F.lit(2.0), F.col("bucket") - 1).cast("long")),
+        )
+        .withColumn(
+            "hi",
+            F.when(F.col("bucket") <= 0, F.lit(None))
+             .otherwise((F.pow(F.lit(2.0), F.col("bucket")) - 1).cast("long")),
+        )
+    )
+    return out.select("bucket", "lo", "hi", "n").orderBy("bucket")

@@ -167,6 +167,67 @@ def _round_trips(spark, build) -> int:
     return n[0]
 
 
+def _ref_dot_lit(vec, plane):
+    """The reference dot product against a constant: one ``F.lit``
+    Column per element, as it was first written."""
+    arr = F.array(*[F.lit(float(w)) for w in plane])
+    return F.aggregate(
+        F.zip_with(vec, arr, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _ref_hyperplane_signature(vec, *, dim, n_planes, seed):
+    """The reference bucket id: one Column per plane, ``sig + bit *
+    2^b`` unrolled."""
+    planes = np.random.RandomState(seed).randn(n_planes, dim)
+    sig = F.lit(0)
+    for b in range(n_planes):
+        bit = (_ref_dot_lit(vec, planes[b]) >= 0).cast("int")
+        sig = sig + bit * F.lit(1 << b)
+    return sig
+
+
+def _ref_cosine_to_query(vec, query):
+    q = np.asarray(query, dtype=float)
+    qn = float(np.linalg.norm(q)) or 1e-12
+    vn = F.sqrt(F.aggregate(
+        vec, F.lit(0.0),
+        lambda acc, v: acc + v.cast("double") * v.cast("double"),
+    ))
+    return _ref_dot_lit(vec, q) / (F.greatest(vn, F.lit(1e-12)) * F.lit(qn))
+
+
+def _ref_ivf_assign(vec, centroids):
+    """The reference assignment: one distance fold and one struct per
+    centroid, guarded on the first centroid's distance."""
+    dists = [
+        F.aggregate(
+            F.zip_with(
+                vec, F.array(*[F.lit(float(w)) for w in c]),
+                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        for c in centroids
+    ]
+    pairs = F.array(*[
+        F.struct(d.alias("d"), F.lit(i).alias("i"))
+        for i, d in enumerate(dists)
+    ])
+    return F.when(
+        vec.isNotNull() & dists[0].isNotNull(), F.array_min(pairs)["i"]
+    )
+
+
+def _bits(row) -> tuple:
+    """A row with every double as its exact bit pattern (``-0.0`` and
+    ``0.0`` differ)."""
+    return tuple(v.hex() if isinstance(v, float) else v for v in row)
+
+
 # NULL, empty and whitespace-only text; 1, 2, 3 and more tokens;
 # repeated shingles; an exact duplicate
 EDGE_DOCS = [
@@ -372,12 +433,117 @@ class TestSimilarity:
         }
         assert got == {1: None, 2: None, 3: 0}
 
-    def test_lsh_rejects_oversized_probe_radius(self, spark):
-        df = spark.createDataFrame(
-            [(1, [0.1] * 8)], "vec_id long, embedding array<double>"
+    @pytest.fixture(scope="class")
+    def edge_vectors(self, spark):
+        """Seeded dim-16 vectors plus a NULL vector, a NULL element, a
+        short vector, signed zeros and an all-zero vector."""
+        rng = np.random.RandomState(3)
+        rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(24)]
+        rows += [
+            (100, None),
+            (101, [0.5] * 7 + [None] + [0.5] * 8),
+            (102, [0.25] * 15),
+            (103, [-0.0, 0.0] * 8),
+            (104, [0.0] * 16),
+            (105, [-0.0] + [float(x) for x in rng.randn(15)]),
+        ]
+        return spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>")
+
+    def test_kernel_matches_unrolled_reference(self, spark, edge_vectors):
+        """The one-literal signature, assignment and query cosine give
+        the unrolled formulas' values and types, bit for bit."""
+        from schematic_spark.functions import (
+            cosine_to_query, hyperplane_signature, ivf_assign,
         )
+
+        vec = F.col("embedding")
+        rng = np.random.RandomState(11)
+        query = [float(x) for x in rng.randn(16)]
+        cents = {n: rng.randn(n, 16) for n in (1, 8)}
+        cols = [("cos", cosine_to_query, _ref_cosine_to_query, (query,), {})]
+        cols += [
+            (f"sig{n}", hyperplane_signature, _ref_hyperplane_signature,
+             (), {"dim": 16, "n_planes": n, "seed": 42})
+            for n in (1, 12, 24, 32)
+        ]
+        cols += [(f"ivf{n}", ivf_assign, _ref_ivf_assign, (c,), {})
+                 for n, c in cents.items()]
+        got, ref = (
+            edge_vectors.select("vec_id", *[
+                fns[i](vec, *args, **kw).alias(name)
+                for name, *fns, args, kw in cols
+            ]).orderBy("vec_id")
+            for i in (0, 1)
+        )
+        assert got.schema == ref.schema
+        assert got.schema["sig32"].dataType.simpleString() == "bigint"
+        assert got.schema["sig24"].dataType.simpleString() == "int"
+        got_rows, ref_rows = got.collect(), ref.collect()
+        assert [_bits(r) for r in got_rows] == [_bits(r) for r in ref_rows]
+        edge = {r["vec_id"]: r for r in got_rows if r["vec_id"] >= 100}
+        assert all(
+            edge[i][c] is None
+            for i in (100, 101, 102) for c, *_ in cols
+        )
+        assert edge[104]["sig12"] == (1 << 12) - 1  # 0 >= 0 on every plane
+
+    @pytest.mark.parametrize("builder,small,large", [
+        ("lsh", (12, 16), (24, 64)),
+        ("ivf", (8, 64), (32, 64)),
+    ])
+    def test_build_cost_does_not_grow_with_width(
+        self, spark, builder, small, large
+    ):
+        """Building an LSH or IVF query costs the same py4j round trips
+        at 24 planes and dim 64 as at 12 planes and dim 16, and at 32
+        centroids as at 8 (one literal per constant; one Column per
+        element costs thousands more)."""
+        df = spark.createDataFrame(
+            [(1, [0.1] * 64)], "vec_id long, embedding array<double>")
+        rng = np.random.RandomState(5)
+
+        def build(width, dim):
+            q = [float(x) for x in rng.randn(dim)]
+            if builder == "lsh":
+                return lsh_topk(df, q, n_planes=width)
+            return ivf_topk(df, q, rng.randn(width, dim), n_probe=3)
+
+        build(*small)  # first build resolves JVM members
+        a, b = (_round_trips(spark, lambda: build(*w)) for w in (small, large))
+        assert abs(b - a) <= 20, (a, b)
+
+    def test_float_vectors_multiply_in_double(self, spark):
+        """``dot`` and ``cosine_similarity`` on array<float> equal the
+        same call on the column cast to array<double>."""
+        from schematic_spark.functions import cosine_similarity, dot
+
+        rng = np.random.RandomState(9)
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in rng.randn(32)],
+              [float(x) for x in rng.randn(32)]) for i in range(20)],
+            "i long, a array<float>, b array<float>",
+        )
+        a, b = F.col("a"), F.col("b")
+        ad, bd = a.cast("array<double>"), b.cast("array<double>")
+        rows = df.select(
+            dot(a, a).alias("d"), dot(ad, ad).alias("dd"),
+            dot(a, b).alias("ab"), dot(ad, bd).alias("abd"),
+            cosine_similarity(a, b).alias("c"),
+            cosine_similarity(ad, bd).alias("cd"),
+        ).collect()
+        for r in rows:
+            assert (r["d"], r["ab"], r["c"]) == (r["dd"], r["abd"], r["cd"])
+
+    def test_full_probe_radius_is_brute_force(self, spark, edge_vectors):
+        """A radius of ``n_planes`` keeps every bucket, so LSH returns
+        the brute-force rows; a negative radius raises."""
+        vecs = edge_vectors.where("vec_id < 100")
+        q = [float(x) for x in np.random.RandomState(2).randn(16)]
+        got = lsh_topk(vecs, q, k=8, n_planes=6, probe_radius=6).collect()
+        assert got == cosine_topk(vecs, q, k=8).collect()
         with pytest.raises(ValueError, match="probe_radius"):
-            lsh_topk(df, [0.1] * 8, probe_radius=3)
+            lsh_topk(vecs, q, probe_radius=-1)
 
     def test_embedding_near_duplicates(self, spark):
         v = [float(x) for x in np.linspace(0.1, 1.0, 16)]

@@ -669,6 +669,61 @@ class TestCheckpointWaves:
         assert sum(r["n_rows"] for r in pf.collect()) == 100
 
 
+    def test_four_wave_run_compiles_the_spec_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Every wave filters one compiled frame: a 4-wave run calls
+        ``validate`` exactly once and still commits every bucket."""
+        from schematic_spark.sources import checkpoint as ckpt
+
+        fmt, df, schema = self._fixture(spark, tmp_path)
+        calls, validate = [], ckpt.validate
+
+        def spy(*args, **kwargs):
+            calls.append(args)
+            return validate(*args, **kwargs)
+
+        monkeypatch.setattr(ckpt, "validate", spy)
+        res = run_validation_checkpointed(
+            spark, df, schema, fmt, n_buckets=8, run_id="w",
+            input_snapshot="snapS", commit_every=2,
+        )
+        assert len(calls) == 1
+        assert res["processed_buckets"] == list(range(8))
+        assert res["totals"] == {"Valid": 90, "ValidationError": 10}
+        pf = partition_passfail(spark, fmt).collect()
+        assert sorted(r["bucket"] for r in pf) == list(range(8))
+
+    def test_bookkeeping_tables_keep_their_schema(self, spark, tmp_path):
+        """The metrics and lineage appends keep the schema the
+        ``createDataFrame`` form wrote: columns sorted by name, ints as
+        bigint, strings as string."""
+        from schematic_spark.sources.checkpoint import (
+            LINEAGE_TABLE, METRICS_TABLE,
+        )
+
+        fmt, df, schema = self._fixture(spark, tmp_path)
+        run_validation_checkpointed(
+            spark, df, schema, fmt, n_buckets=2, run_id="o'k\"",
+            input_snapshot="snap é", commit_every=1,
+        )
+        metrics = fmt.read(spark, METRICS_TABLE)
+        lineage = fmt.read(spark, LINEAGE_TABLE)
+        assert metrics.schema.simpleString() == (
+            "struct<attempt_id:string,bucket:bigint,input_snapshot:string,"
+            "n_buckets:bigint,n_rows:bigint,n_violations:bigint,"
+            "run_id:string,spec_fp:string,verdict:string>"
+        )
+        assert lineage.schema.simpleString() == (
+            "struct<attempt_id:string,bucket:bigint,input_snapshot:string,"
+            "n_buckets:bigint,n_rows:bigint,run_id:string,spec_fp:string,"
+            "status:string>"
+        )
+        # caller strings arrive as values, quotes and all
+        assert {(r["run_id"], r["input_snapshot"])
+                for r in lineage.collect()} == {("o'k\"", "snap é")}
+        assert sum(r["n_rows"] for r in lineage.collect()) == 100
+
 class TestCheckpointEdgeCases:
     """Round-3 review regressions: all-valid waves, empty buckets,
     unknown snapshots, corrupt manifests."""

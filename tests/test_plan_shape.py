@@ -325,6 +325,40 @@ class TestPlanShapeRound3:
         assert final.count("md5(") == 1, final
 
 
+class TestCheckpointPlan:
+    def test_wave_filter_sits_below_validation(self, spark, tmp_path):
+        """A checkpointed run compiles the spec once and each wave
+        filters the compiled frame on its buckets; the optimizer must
+        still push that filter under every validation projection, onto
+        the scan, so a wave validates only its own rows."""
+        from schematic_spark.sources import (
+            ParquetDirFormat, run_validation_checkpointed,
+        )
+        from schematic_spark.sources.checkpoint import VIOLATIONS_TABLE
+
+        written = []
+
+        class Spy(ParquetDirFormat):
+            def write(self, df, table, mode="overwrite", partition_by=None):
+                if table == VIOLATIONS_TABLE:
+                    written.append(df)
+                return super().write(df, table, mode, partition_by)
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        run_validation_checkpointed(
+            spark, docs, SPEC, Spy(root=str(tmp_path)), n_buckets=4,
+            commit_every=2,
+        )
+        assert len(written) == 2
+        for df, wave in zip(written, ("(0,1)", "(2,3)")):
+            lines = df._jdf.queryExecution().optimizedPlan().toString() \
+                .splitlines()
+            (at,) = [i for i, ln in enumerate(lines)
+                     if "Filter" in ln and "xxhash64" in ln]
+            assert lines[at].endswith(f"IN {wave}"), lines[at]
+            assert "Relation" in lines[at + 1], lines
+            assert not any("_row_ok" in ln for ln in lines[at:]), lines
+
 class TestPartitionPruning:
     def test_partitioned_sink_prunes_at_scan(self, spark, tmp_path):
         """A violations-style sink written partitionBy(lang) must let a
