@@ -509,13 +509,17 @@ def embedding_near_duplicates(
         )
     dim = stats["hi"]
     # spread: n_planes × dim interpreted mults per row — don't let one
-    # small input file serialize the signature stage (no-op at scale)
+    # small input file serialize the signature stage (no-op at scale).
+    # The signature comes out of a Generate with the NULL filter above
+    # it, so the join's inferred isnotnull(_bucket) cannot be pushed
+    # through the cap's Window into a second signature under the scan
+    # (and both join sides then reuse one exchange)
     sig = spread_for_compute(df).select(
         F.col(id_col), F.col(vec_col),
-        hyperplane_signature(
+        F.explode_outer(F.array(hyperplane_signature(
             F.col(vec_col), dim=dim, n_planes=n_planes, seed=seed
-        ).alias("_bucket"),
-    )
+        ))).alias("_bucket"),
+    ).where(F.col("_bucket").isNotNull())
     # rows of oversized buckets are dropped before the probe fan-out
     sig = _cap_key_groups(sig, ["_bucket"], max_bucket_size)
     # probe set: exact bucket plus its 1-bit neighbours, one XOR per

@@ -1,6 +1,5 @@
 from .drift import (  # noqa: F401
     DriftReport,
-    category_counts,
     chi2_drift,
     chi2_drift_split,
     chi2_sf,
@@ -14,12 +13,7 @@ from .drift import (  # noqa: F401
     psi_from_counts,
 )
 from .fused import FusedSuiteReport, run_fused_suite  # noqa: F401
-from .referential import (  # noqa: F401
-    bloom_bitmap,
-    dangling_rows,
-    dangling_rows_bloom,
-    referential_report,
-)
+from .referential import dangling_rows, referential_report  # noqa: F401
 from .sessions import funnel_stages, session_stats, sessionize  # noqa: F401
 from .stats import column_stats, length_histogram  # noqa: F401
 from .uniqueness import (  # noqa: F401

@@ -1,11 +1,12 @@
 """Distribution-drift tests — north-rule operator (BASELINE.json:6:
 "KS/chi-square distribution-drift tests against baseline snapshots").
 
-Scale design: the *distributed* part is a bucketed ``groupBy(bucket)
-.count()`` per snapshot — one shuffle producing at most ``n_buckets``
-rows. The statistic itself runs on the driver over those tiny
-histograms (numpy; scipy is absent in the sandbox so both statistics
-are implemented by hand — they're ~15 lines each).
+Scale design: the *distributed* part is one ``groupBy(bucket,
+snapshot).count()`` (``_split_counts``) over a boolean split of one
+table or the UNION ALL of two snapshots — one shuffle producing at
+most ``2 * n_buckets`` rows. The statistic itself runs on the driver
+over those tiny histograms (numpy; scipy is not a dependency, so
+both statistics are implemented by hand — they're ~15 lines each).
 
 * KS (two-sample, on binned data): D = max |ECDF1 - ECDF2| over bucket
   boundaries, with the asymptotic two-sample p-value
@@ -37,23 +38,23 @@ def _bucket_expr(column: str, lo: float, hi: float, n_buckets: int):
     if not hi > lo:
         raise ValueError(
             f"histogram range must satisfy hi > lo (got [{lo}, {hi}]) — "
-            "a zero/negative width divides to ±Inf and the int cast "
-            "throws under ANSI mode"
+            "a zero or negative bucket width cannot bucket values"
         )
     col = F.col(column).cast("double")
     width = (hi - lo) / n_buckets
-    # NaN guard: isNotNull() does NOT filter NaN, and floor(NaN)
-    # .cast('int') throws under ANSI (which is ON — CLAUDE.md); a NaN
-    # value falls out of every bucket instead, like a null
+    # NaN guard: isNotNull() does NOT filter NaN, and floor(NaN) is
+    # bigint 0; a NaN value falls out of every bucket instead, like a
+    # null. The clamp runs in floor's bigint and the int cast comes
+    # last: ±Inf or a far outlier passes int range, and casting first
+    # throws CAST_OVERFLOW under ANSI (on by default since Spark 4)
     return F.when(
         ~F.isnan(col),
         F.least(
             F.greatest(
-                F.floor((col - F.lit(lo)) / F.lit(width)).cast("int"),
-                F.lit(0),
+                F.floor((col - F.lit(lo)) / F.lit(width)), F.lit(0)
             ),
             F.lit(n_buckets - 1),
-        ),
+        ).cast("int"),
     )
 
 
@@ -76,18 +77,6 @@ def numeric_histogram(
         df.where(col.isNotNull() & ~F.isnan(col))
         .select(_bucket_expr(column, lo, hi, n_buckets).alias("bucket"))
         .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def category_counts(df: DataFrame, column: str) -> DataFrame:
-    """(category, n) counts; null becomes the '__null__' category."""
-    return (
-        df.select(
-            F.coalesce(F.col(column).cast("string"), F.lit("__null__"))
-            .alias("category")
-        )
-        .groupBy("category")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -248,6 +237,18 @@ def _psi_report(cur: dict, base: dict, threshold: float) -> DriftReport:
     )
 
 
+def _snapshots(current: DataFrame, baseline: DataFrame, column: str,
+               dtype: str) -> DataFrame:
+    """Both snapshots as one frame: the column cast to ``dtype`` (so an
+    int snapshot unions with a bigint one) as ``_v``, and a ``_cur``
+    flag — the input of the ``_split`` twins, counted in one job."""
+    return current.select(
+        F.col(column).cast(dtype).alias("_v"), F.lit(True).alias("_cur")
+    ).unionByName(baseline.select(
+        F.col(column).cast(dtype).alias("_v"), F.lit(False).alias("_cur")
+    ))
+
+
 def ks_drift(
     current: DataFrame,
     baseline: DataFrame,
@@ -258,25 +259,16 @@ def ks_drift(
     n_buckets: int = 64,
     alpha: float = 0.01,
 ) -> DriftReport:
-    """Two-snapshot KS drift on a numeric column. Two scans (one per
-    snapshot), each a single bucketed hash-agg."""
-    h1 = {
-        r["bucket"]: r["n"]
-        for r in numeric_histogram(
-            current, column, lo=lo, hi=hi, n_buckets=n_buckets
-        ).collect()
-    }
-    h2 = {
-        r["bucket"]: r["n"]
-        for r in numeric_histogram(
-            baseline, column, lo=lo, hi=hi, n_buckets=n_buckets
-        ).collect()
-    }
-    return _ks_report(h1, h2, alpha)
+    """Two-snapshot KS drift on a numeric column: one bucketed hash-agg
+    over the UNION ALL of both snapshots (:func:`ks_drift_split`)."""
+    return ks_drift_split(
+        _snapshots(current, baseline, column, "double"), "_v",
+        F.col("_cur"), lo=lo, hi=hi, n_buckets=n_buckets, alpha=alpha,
+    )
 
 
 def _split_counts(df, key_expr, is_current, key_name: str):
-    """Shared core of the *_drift_split variants: one scan, one
+    """Shared core of every drift test: one scan, one
     ``groupBy(key, split)`` hash-agg, returned as the two
     (key → count) maps. Any fix to the split handling (the
     ``isNotNull`` filter, sentinel keys) lives HERE once."""
@@ -311,8 +303,8 @@ def ks_drift_split(
     """Two-sample KS where current/baseline are a boolean SPLIT of the
     same table (``is_current`` a Column predicate): ONE scan, one
     ``groupBy(bucket, split)`` hash-agg (≤ 2·n_buckets rows collected)
-    — use instead of two :func:`ks_drift` scans whenever both snapshots
-    live in one table (time windows, A/B halves, partition parity)."""
+    — use instead of :func:`ks_drift` whenever both snapshots live in
+    one table (time windows, A/B halves, partition parity)."""
     col = F.col(column).cast("double")
     # NaN filtered like numeric_histogram (same r5-ADVICE leak)
     h1, h2 = _split_counts(
@@ -346,14 +338,12 @@ def chi2_drift(
     *,
     alpha: float = 0.01,
 ) -> DriftReport:
-    """Categorical chi-square drift between two snapshots."""
-    obs = {
-        r["category"]: r["n"] for r in category_counts(current, column).collect()
-    }
-    base = {
-        r["category"]: r["n"] for r in category_counts(baseline, column).collect()
-    }
-    return _chi2_report(obs, base, alpha)
+    """Categorical chi-square drift between two snapshots — one
+    ``groupBy(category, snapshot)`` over their UNION ALL."""
+    return chi2_drift_split(
+        _snapshots(current, baseline, column, "string"), "_v",
+        F.col("_cur"), alpha=alpha,
+    )
 
 
 def psi_from_counts(current: dict, baseline: dict) -> float:
@@ -387,18 +377,13 @@ def psi_drift(
 ) -> DriftReport:
     """Categorical PSI drift between two snapshots — the standard ML
     monitoring statistic alongside KS (numeric shape) and chi-square
-    (significance). Two bucketed hash-aggs + a ≤|categories|-row
-    driver statistic; PSI has no p-value (NaN) — ``drifted`` is the
-    conventional threshold test."""
-    cur = {
-        r["category"]: r["n"]
-        for r in category_counts(current, column).collect()
-    }
-    base = {
-        r["category"]: r["n"]
-        for r in category_counts(baseline, column).collect()
-    }
-    return _psi_report(cur, base, threshold)
+    (significance). One ``groupBy(category, snapshot)`` over their
+    UNION ALL + a ≤|categories|-row driver statistic; PSI has no
+    p-value (NaN) — ``drifted`` is the conventional threshold test."""
+    return psi_drift_split(
+        _snapshots(current, baseline, column, "string"), "_v",
+        F.col("_cur"), threshold=threshold,
+    )
 
 
 def psi_drift_split(

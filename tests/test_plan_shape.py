@@ -324,6 +324,21 @@ class TestPlanShapeRound3:
         final = _plan(out).split("== Initial Plan ==")[0]
         assert final.count("md5(") == 1, final
 
+    def test_embedding_signature_one_scan_one_pass(self, spark):
+        """``embedding_near_duplicates`` computes the hyperplane
+        signature once per row: the join's inferred NULL filter must
+        not be pushed through the bucket cap's Window into a second
+        signature under a second scan, so both join sides read one
+        exchange. The 2-D plane literal prints as ``transform([[``."""
+        from schematic_spark.functions import embedding_near_duplicates
+
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        out = embedding_near_duplicates(emb, threshold=0.3, n_planes=8)
+        out.collect()
+        final = _plan(out).split("== Initial Plan ==")[0]
+        assert final.count("FileScan") == 1, final
+        assert final.count("transform([[") == 1, final
+
 
 class TestCheckpointPlan:
     def test_wave_filter_sits_below_validation(self, spark, tmp_path):

@@ -14,10 +14,9 @@ query is built) can be counted in the same loop.
 
 from __future__ import annotations
 
-# the remaining debt: caches that are never unpersisted, and one
+# the remaining debt: a cache that is never unpersisted, and one
 # query-level localCheckpoint
 LEAVES_SESSION_STATE = {
-    "dangling_lineitem_bloom",  # suite/referential.py bitmap cache()
     "versioned_json_documents",  # migrations.py cache()
     "winnow_fingerprints_documents",  # the query's localCheckpoint()
 }

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from schematic_spark.generator import (
 )
 from schematic_spark.suite import (
     chi2_drift,
+    chi2_drift_split,
     chi2_sf,
     chi_square_from_counts,
     column_stats,
@@ -26,8 +28,12 @@ from schematic_spark.suite import (
     duplicate_keys,
     duplicate_keys_salted,
     ks_drift,
+    ks_drift_split,
     ks_from_histograms,
     length_histogram,
+    numeric_histogram,
+    psi_drift,
+    psi_drift_split,
     referential_report,
     uniqueness_report,
 )
@@ -147,101 +153,44 @@ class TestReferential:
         r = referential_report(fact, media, "media_ref").first()
         assert r["n_null_fk"] == 1 and r["n_dangling"] == 0
 
-
-class TestBloomReferential:
-    """dangling_rows_bloom must return the EXACT dangling set (Bloom
-    has no false negatives; the anti-join removes false positives) with
-    a plan that never shuffles the fact during prefiltering."""
-
-    def test_matches_exact_path(self, spark, docs, media):
-        from schematic_spark.suite import dangling_rows_bloom
-
-        spans = exploded_spans(docs).where(F.col("media_ref").isNotNull())
-        exact = {
-            r["media_ref"]
-            for r in dangling_rows(
-                spans, media, "media_ref", broadcast=True
-            ).collect()
-        }
-        got = dangling_rows_bloom(
-            spans, media, "media_ref", n_keys=CFG.n_media
-        ).collect()
-        assert {r["media_ref"] for r in got} == exact
-        # row multiplicity preserved too
-        assert len(got) == dangling_rows(
-            spans, media, "media_ref", broadcast=True
-        ).count()
-
-    def test_tiny_filter_forces_false_positives_still_exact(
-        self, spark, docs, media
-    ):
-        from schematic_spark.suite import dangling_rows_bloom
-
-        spans = exploded_spans(docs).where(F.col("media_ref").isNotNull())
-        n_exact = dangling_rows(
-            spans, media, "media_ref", broadcast=True
-        ).count()
-        # 1 bit/key, 1 hash: filter saturates, nearly everything becomes
-        # a candidate — the exact join must still clean it up
-        got = dangling_rows_bloom(
-            spans, media, "media_ref",
-            n_keys=CFG.n_media, bits_per_key=1, n_hashes=1,
-        ).count()
-        assert got == n_exact
-
-    def test_empty_dim_everything_dangles(self, spark, media):
-        from schematic_spark.suite import dangling_rows_bloom
-
-        empty = media.where(F.lit(False))
-        fact = media.select("media_ref").limit(7)
-        assert dangling_rows_bloom(
-            fact, empty, "media_ref", n_keys=0
-        ).count() == 7
-
-    def test_prefilter_is_broadcast_only(self, spark, docs, media):
-        from schematic_spark.suite import dangling_rows_bloom
-
-        spans = exploded_spans(docs).where(F.col("media_ref").isNotNull())
-        df = dangling_rows_bloom(
-            spans, media, "media_ref", n_keys=CFG.n_media, n_hashes=3
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("BroadcastHashJoin") >= 3, plan
-        # the only exchanges allowed: bitmap build (dim-sized) + the
-        # final exact anti-join over suspects — never a fact-side
-        # repartition in the prefilter chain
-        assert "CartesianProduct" not in plan, plan
-
-    def test_composite_key_rejected(self, spark, media):
-        from schematic_spark.suite import dangling_rows_bloom
-
-        with pytest.raises(ValueError, match="exactly one key"):
-            dangling_rows_bloom(
-                media, media, {"media_ref": "media_ref", "kind": "kind"},
-                n_keys=1,
+    @pytest.mark.parametrize(
+        "broadcast", [True, False, "auto"],
+        ids=["broadcast", "sort_merge", "auto"],
+    )
+    def test_dangling_rows_matches_reference(self, spark, broadcast):
+        """Every join strategy returns the rows of a Python anti-join:
+        a row dangles when its whole key is non-null and matches no dim
+        key; a NULL key component never dangles; an empty dim leaves
+        every non-null row dangling."""
+        fact_rows = [
+            (k1, k2, i)
+            for i, (k1, k2) in enumerate(
+                [(1, "a"), (1, "b"), (2, "a"), (3, "c"), (3, "c"),
+                 (None, "a"), (4, None), (None, None), (5, "e")]
             )
+        ]
+        dim_rows = [(1, "a"), (2, "a"), (3, "c"), (4, "d"), (None, "e")]
+        fact = spark.createDataFrame(fact_rows, "k1 int, k2 string, i int")
+        dim = spark.createDataFrame(dim_rows, "d1 int, d2 string")
 
-    def test_key_type_mismatch_rejected(self, spark):
-        # xxhash64 is type-sensitive: INT 7 and BIGINT 7 hash apart, so
-        # a silent mismatch would fabricate proven-dangling rows
-        from schematic_spark.suite import dangling_rows_bloom
+        def check(dim_df, on, key, dim_keys):
+            want = [
+                r[2] for r in fact_rows
+                if None not in key(r) and key(r) not in dim_keys
+            ]
+            got = sorted(
+                r.i for r in
+                dangling_rows(fact, dim_df, on, broadcast=broadcast)
+                .collect()
+            )
+            assert got == want
 
-        fact = spark.createDataFrame([(7,)], "k int")
-        dim = spark.createDataFrame([(7,)], "k bigint")
-        with pytest.raises(ValueError, match="hashes these differently"):
-            dangling_rows_bloom(fact, dim, "k", n_keys=1)
-
-    def test_probe_scratch_column_clash_rejected(self, spark):
-        # the probe joins materialize _w{i}/_b{i}/_word{i} scratch
-        # columns; withColumns would silently REPLACE a same-named fact
-        # column and the final select would return probe values as user
-        # data — must refuse instead
-        from schematic_spark.suite import dangling_rows_bloom
-
-        fact = spark.createDataFrame([(7, 1)], "k bigint, _word0 bigint")
-        dim = spark.createDataFrame([(7,)], "k bigint")
-        with pytest.raises(ValueError, match="scratch columns"):
-            dangling_rows_bloom(fact, dim, "k", n_keys=1)
+        check(dim, {"k1": "d1", "k2": "d2"}, lambda r: r[:2],
+              set(dim_rows))
+        check(dim, {"k1": "d1"}, lambda r: r[:1],
+              {(d1,) for d1, _ in dim_rows})
+        check(dim.where(F.lit(False)), {"k1": "d1"}, lambda r: r[:1],
+              set())
 
 
 def _ref_in_dim(ref: str) -> bool:
@@ -374,6 +323,111 @@ class TestDrift:
         sa = ks_drift_split(dirty, "v", F.col("cur"), lo=0, hi=50)
         assert (sa.statistic, sa.detail) == (b.statistic, b.detail)
 
+    @pytest.mark.parametrize("kind", ["ks", "chi2", "psi"])
+    def test_two_snapshot_matches_split(self, spark, kind):
+        """A two-snapshot drift test reports exactly what its ``_split``
+        twin reports over the same rows, with NULL and NaN values and an
+        int current column against a bigint baseline."""
+        int_cur = _drift_snapshot(spark, 3000, 7, "int")
+        long_base = _drift_snapshot(spark, 2000, 5, "bigint")
+        nan_cur = _drift_snapshot(spark, 3000, 7, "double")
+        nan_base = _drift_snapshot(spark, 2000, 3, "double")
+        two_snapshot, split = _DRIFT_PAIRS[kind]
+        for cur, base in ((int_cur, long_base), (nan_cur, nan_base)):
+            both = cur.select("v", F.lit(True).alias("cur")).unionByName(
+                base.select("v", F.lit(False).alias("cur"))
+            )
+            two = two_snapshot(cur, base, "v")
+            one = split(both, "v", F.col("cur"))
+            assert (two.kind, two.statistic, two.drifted, two.detail) == (
+                one.kind, one.statistic, one.drifted, one.detail
+            )
+            if kind == "psi":
+                assert math.isnan(two.p_value) and math.isnan(one.p_value)
+            else:
+                assert two.p_value == one.p_value
+
+    @pytest.mark.parametrize("kind", ["ks", "chi2", "psi"])
+    def test_two_snapshot_drift_is_one_job(self, spark, kind):
+        """Both snapshots are counted by one aggregation over their
+        UNION ALL: one Spark job. AQE submits each shuffle map stage as
+        a job of its own, so it is off while the jobs are counted."""
+        cur = _drift_snapshot(spark, 3000, 7, "int")
+        base = _drift_snapshot(spark, 2000, 5, "bigint")
+        sc = spark.sparkContext
+        group = f"two-snapshot-{kind}"
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sc.setJobGroup(group, group)
+        try:
+            _DRIFT_PAIRS[kind][0](cur, base, "v")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    def test_outliers_clamp_into_edge_buckets(self, spark):
+        """+inf, -inf and a value whose bucket index passes int range
+        land in the edge buckets (they used to fail the job with
+        CAST_OVERFLOW under ANSI); NaN and NULL fall out. Every bucketing
+        path agrees: the histogram, both KS shapes and the fused
+        suite's observed sums."""
+        from pyspark.sql import Observation
+
+        from schematic_spark.suite.fused import _hist_aggs
+
+        inf = float("inf")
+        rows = [(inf, True), (-inf, False), (3e12, True), (1.0, False),
+                (None, True), (float("nan"), False), (2.5, True)]
+        df = spark.createDataFrame(rows, "v double, cur boolean")
+        hist = {
+            r["bucket"]: r["n"]
+            for r in numeric_histogram(df, "v", lo=0, hi=4, n_buckets=4)
+            .collect()
+        }
+        assert hist == {0: 1, 1: 1, 2: 1, 3: 2}
+        obs = Observation("outliers")
+        df.observe(obs, *_hist_aggs("v", 0.0, 4.0, 4)).count()
+        assert {b: obs.get[f"__b{b}"] for b in range(4)} == hist
+        # the same report as the outliers moved inside the edge buckets
+        inside = spark.createDataFrame(
+            [(3.5, True), (0.5, False), (3.9, True), (1.0, False),
+             (2.5, True)],
+            "v double, cur boolean",
+        )
+        want = ks_drift_split(inside, "v", F.col("cur"), lo=0, hi=4,
+                              n_buckets=4)
+        for got in (
+            ks_drift(df.where("cur"), df.where("not cur"), "v",
+                     lo=0, hi=4, n_buckets=4),
+            ks_drift_split(df, "v", F.col("cur"), lo=0, hi=4, n_buckets=4),
+        ):
+            assert (got.statistic, got.p_value, got.detail) == (
+                want.statistic, want.p_value, want.detail
+            )
+
+
+def _drift_snapshot(spark, n: int, step: int, dtype: str):
+    """``n`` rows of column ``v`` typed ``dtype`` over 0..47, with NULLs
+    and, for a double column, NaNs."""
+    v = F.pmod(F.col("id") * step, 48)
+    if dtype == "double":
+        v = F.when(F.col("id") % 11 == 0, F.lit(float("nan"))).otherwise(v)
+    return spark.range(n).select(
+        F.when(F.col("id") % 13 == 0, None).otherwise(v).cast(dtype)
+        .alias("v")
+    )
+
+
+_KS_RANGE = {"lo": 0, "hi": 48, "n_buckets": 12}
+_DRIFT_PAIRS = {
+    "ks": (partial(ks_drift, **_KS_RANGE),
+           partial(ks_drift_split, **_KS_RANGE)),
+    "chi2": (chi2_drift, chi2_drift_split),
+    "psi": (psi_drift, psi_drift_split),
+}
+
 
 class TestSpanOrder:
     def test_non_monotonic_detection(self, spark, docs):
@@ -402,26 +456,6 @@ class TestPsiDrift:
         assert psi_from_counts(cur, cur) == 0.0
         # a category absent from one side stays finite via smoothing
         assert psi_from_counts({"a": 100}, {"b": 100}) > 1.0
-
-    def test_psi_split_matches_two_frame(self, spark):
-        from schematic_spark.suite import psi_drift, psi_drift_split
-
-        df = spark.range(4000).select(
-            F.col("id"),
-            F.when(F.pmod(F.col("id"), 11) < F.pmod(F.col("id"), 4), "x")
-             .when(F.pmod(F.col("id"), 3) == 0, "y")
-             .otherwise("z").alias("c"),
-        )
-        split = psi_drift_split(df, "c", F.col("id") % 2 == 0)
-        two = psi_drift(
-            df.where(F.col("id") % 2 == 0),
-            df.where(F.col("id") % 2 == 1),
-            "c",
-        )
-        assert abs(split.statistic - two.statistic) < 1e-12
-        assert split.kind == "psi"
-        # same distribution on both halves except sampling noise → stable
-        assert not split.drifted
 
     def test_psi_detects_shift(self, spark):
         from schematic_spark.suite import psi_drift
